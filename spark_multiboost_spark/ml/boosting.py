@@ -9,8 +9,8 @@ mount was empty at survey time, SURVEY.md §0):
   value); SURVEY §1.2 chose the long form so every boosting step is a plain
   relational op.
 - DecisionStumpAlgorithm.run [R] .../baselearners/DecisionStump.scala ->
-  :func:`stump_candidates` (A3) + prefix-sum threshold search (A4) +
-  Z-criterion scoring (A5) + argmin (A6).
+  :func:`fit_stump`: candidate cuts (A3) + prefix-sum threshold search (A4)
+  + Z-criterion scoring (A5) + argmin (A6), in one chain.
 - AdaBoostMHAlgorithm.run [R] .../stronglearners/AdaBoostMH.scala ->
   :func:`train` (A10): driver loop, weight update + normalization (A8),
   localCheckpoint per round (plan truncation — our analogue of the
@@ -25,11 +25,13 @@ Math (Schapire & Singer 1999, BoosTexter 2000):
   Z(j,theta) = 2 sum_l sqrt(W_+^l W_-^l)   (minimized over candidates)
   weight update: w' = w exp(-y v_l phi(x)) / Z_norm
 
-Scale posture (SURVEY §4.2): the candidate search pre-aggregates weights by
-(feature, value, class) BEFORE the window prefix-sum, so the window input is
-|distinct values| x K per feature, not m x K; the per-feature window is the
-d-way shuffle documented for salting at extreme scale. Feature indices are
-1-based everywhere (matches SQL element_at/list indexing in both engines).
+Scale posture (SURVEY §4.2): :func:`fit_stump` pre-aggregates weights by
+(feature, value) with the K classes folded into 2K columns BEFORE the window
+prefix-sum, so the window input is |distinct values| rows per feature, not
+m x K; the per-feature window is a d-way shuffle (it was d x K with the
+long-form (feature, class) window), and :func:`stump_class_weights_salted`
+is the way out when one feature is skewed. Feature indices are 1-based
+everywhere (matches SQL element_at/list indexing in both engines).
 """
 
 from __future__ import annotations
@@ -307,39 +309,98 @@ def fit_stump(
     """A3-A6 (reference: DecisionStumpAlgorithm.run [R]): find the best cut
     and its confidence-rated votes.
 
-    ONE driver action per stump search: the argmin row is broadcast-joined
-    back onto the class-weight frame, so (feature, threshold, z) and all K
-    votes arrive in a single K-row collect. On a cluster every action is a
-    job launch — per-round latency is action-count-bound, not data-bound,
-    at the reference's data sizes."""
-    cw = stump_class_weights(weighted, feats)
-    best = best_stump_row(stump_z(cw))
+    Shape per round — one chain, one 1-row driver action:
+
+      1. ``feats ⨝ weighted`` on id (m·d·K rows);
+      2. ``groupBy(feature, value)`` with the K classes folded into 2K
+         conditional sums ``sp_l`` / ``sm_l`` — distinct values × d rows;
+      3. one prefix-sum window per feature, ordered by value, giving every
+         class's W_+ / W_- at each cut (window parallelism d);
+      4. z = 2 Σ_l sqrt(W_+^l W_-^l), summed in class order, and the K
+         eps-smoothed votes, both row-wise;
+      5. one global ``min(struct(floor(z·1e9 + 0.5), feature, threshold,
+         z, votes))`` — exactly :func:`best_stump_row`'s key and tiebreak,
+         with no sort, no limit and no join back for the votes.
+
+    The cut and votes equal the relational pieces (:func:`stump_class_weights`
+    → :func:`stump_z` → :func:`best_stump_row`) up to summation order: z
+    sums classes in class order, and repeated values' weights may add up in
+    another order, so only the last bits can differ.  A feature with ~m distinct
+    values puts all of them in one window partition; at that skew
+    :func:`stump_class_weights_salted` is the way out.
+
+    Raises ValueError when the search frame has no candidate cut (a
+    ``sample_pred`` that keeps no rows, a feature filter that keeps no
+    features)."""
     eps = 1.0 / (2.0 * m * num_classes)
-    rows = (
-        cw.join(F.broadcast(best), ["feature", "threshold"])
-        .select(
-            "feature",
-            "threshold",
-            "z",
-            "class",
-            (
-                0.5
-                * F.log(
-                    (F.col("w_plus") + F.lit(eps)) / (F.col("w_minus") + F.lit(eps))
-                )
-            ).alias("v"),
+    classes = range(num_classes)
+
+    def mass(l: int, y: int) -> Column:
+        hit = (F.col("class") == l) & (F.col("y") == y)
+        return F.sum(F.when(hit, F.col("weight")).otherwise(0.0))
+
+    grouped = (
+        feats.join(weighted, "id")
+        .groupBy("feature", "value")
+        .agg(
+            *[mass(l, 1).alias(f"sp_{l}") for l in classes],
+            *[mass(l, -1).alias(f"sm_{l}") for l in classes],
         )
-        .collect()  # bounded: K rows — one per class (model-sized)
     )
-    votes = [0.0] * num_classes
-    for r in rows:
-        votes[r["class"]] = r["v"]
+    w_cum = (
+        Window.partitionBy("feature")
+        .orderBy("value")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    w_tot = w_cum.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    cum = grouped.select(
+        "feature",
+        F.col("value").alias("threshold"),
+        *[
+            F.sum(f"{s}_{l}").over(w).alias(f"{p}{s}_{l}")
+            for l in classes
+            for s in ("sp", "sm")
+            for p, w in (("p_", w_cum), ("t_", w_tot))
+        ],
+    )
+    # phi = +1 above the threshold: correct side mass combines the positives
+    # above the cut with the negatives at/below it (as stump_class_weights)
+    w_plus = [
+        F.col(f"t_sp_{l}") - F.col(f"p_sp_{l}") + F.col(f"p_sm_{l}") for l in classes
+    ]
+    w_minus = [
+        F.col(f"t_sm_{l}") - F.col(f"p_sm_{l}") + F.col(f"p_sp_{l}") for l in classes
+    ]
+    z_sum = F.sqrt(w_plus[0] * w_minus[0])
+    for wp, wm in zip(w_plus[1:], w_minus[1:]):
+        z_sum = z_sum + F.sqrt(wp * wm)
+    scored = cum.select(
+        "feature",
+        "threshold",
+        (2.0 * z_sum).alias("z"),
+        F.array(
+            *[
+                0.5 * F.log((wp + F.lit(eps)) / (wm + F.lit(eps)))
+                for wp, wm in zip(w_plus, w_minus)
+            ]
+        ).alias("votes"),
+    )
+    key = F.struct(
+        F.floor(F.col("z") * 1e9 + 0.5).alias("zq"), "feature", "threshold", "z", "votes"
+    )
+    # bounded: 1 row — the global min over every candidate cut
+    best = scored.agg(F.min(key).alias("best")).collect()[0]["best"]
+    if best is None:
+        raise ValueError(
+            f"fit_stump round {t}: no candidate cut — the search frame is empty "
+            "(a sample_pred or feature filter kept no rows)"
+        )
     return Stump(
         t=t,
-        feature=int(rows[0]["feature"]),
-        threshold=float(rows[0]["threshold"]),
-        z=float(rows[0]["z"]),
-        votes=votes,
+        feature=int(best["feature"]),
+        threshold=float(best["threshold"]),
+        z=float(best["z"]),
+        votes=list(best["votes"]),
     )
 
 
@@ -410,10 +471,13 @@ def train(
     """A10 (reference: AdaBoostMHAlgorithm.run [R]): the boosting loop.
 
     Driver-orchestrated like the reference, but all state lives in
-    DataFrames; localCheckpoint per round truncates both RDD lineage and the
-    Catalyst plan (SURVEY §4.2 item 1 — the one genuinely non-free part of
-    DataFrame-native boosting). A12: optional instance/feature subsampling
-    before each stump search.  ``label_set_col`` names an ARRAY<INT>
+    DataFrames. Shape per round: one :func:`fit_stump` chain ending in a
+    1-row collect, then :func:`update_weights` + an eager localCheckpoint
+    that truncates both RDD lineage and the Catalyst plan (SURVEY §4.2 item
+    1 — the one genuinely non-free part of DataFrame-native boosting). The
+    final round skips the reweight: no later search reads it, so T rounds
+    cost T searches and T-1 reweights. A12: optional instance/feature
+    subsampling before each stump search.  ``label_set_col`` names an ARRAY<INT>
     multi-label column (BoosTexter label sets); None = single-label
     ``label``.
 
@@ -464,8 +528,9 @@ def train(
             )
         stump = fit_stump(search_w, search_f, m, num_classes, t)
         stumps.append(stump)
-        weighted = update_weights(weighted, feats, stump, spark)
-        weighted = weighted.localCheckpoint(eager=True)
+        if t + 1 < num_rounds:  # no later search reads the last reweight
+            weighted = update_weights(weighted, feats, stump, spark)
+            weighted = weighted.localCheckpoint(eager=True)
     feats.unpersist()
     emb.unpersist()
     return stumps

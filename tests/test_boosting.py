@@ -41,6 +41,126 @@ def test_stump_search_known_argmin(stump_unit):
     assert stump.z < 1.0  # better than chance
 
 
+def _relational_stump(weighted, feats, m, k):
+    """The stump search as the separate relational pieces: class weights ->
+    Z -> quantized argmin, then the eps-smoothed votes of the argmin cut."""
+    cw = boosting.stump_class_weights(weighted, feats)
+    best = boosting.best_stump_row(boosting.stump_z(cw)).collect()[0]
+    eps = 1.0 / (2.0 * m * k)
+    votes = [0.0] * k
+    for r in cw.filter(
+        (F.col("feature") == best["feature"]) & (F.col("threshold") == best["threshold"])
+    ).collect():
+        votes[r["class"]] = 0.5 * math.log((r["w_plus"] + eps) / (r["w_minus"] + eps))
+    return best["feature"], best["threshold"], best["z"], votes
+
+
+def _assert_matches_relational(weighted, feats, m, k):
+    stump = boosting.fit_stump(weighted, feats, m=m, num_classes=k)
+    feature, threshold, z, votes = _relational_stump(weighted, feats, m, k)
+    assert (stump.feature, stump.threshold) == (feature, threshold)
+    assert abs(stump.z - z) < 1e-12
+    assert len(stump.votes) == k
+    assert all(abs(a - b) < 1e-12 for a, b in zip(stump.votes, votes)), (
+        stump.votes,
+        votes,
+    )
+    return stump
+
+
+def test_fit_stump_matches_relational_pieces(stump_unit):
+    emb, weighted, feats = stump_unit
+    _assert_matches_relational(weighted, feats, m=6, k=2)
+
+
+def test_fit_stump_matches_relational_on_repeated_values(spark):
+    """Few distinct values per feature and non-uniform weights, so the
+    (feature, value) pre-aggregation merges many rows into each cut."""
+    k, m = 3, 40
+    rows = [
+        (i, [float(i % 4), (i % 3) / 3.0, float((i * 7) % 5)], (i * 5) % 3)
+        for i in range(m)
+    ]
+    emb = spark.createDataFrame(
+        rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>, label INT"
+    )
+    raw = F.lit(1.0) + ((F.col("id") * 3 + F.col("class")) % 7).cast("double")
+    weighted = boosting.mlp_long(emb, k).withColumn("weight", raw / F.lit(4.0 * m * k))
+    feats = boosting.explode_features(emb)
+    assert feats.select("feature", "value").distinct().count() < m * 3
+    _assert_matches_relational(weighted, feats, m, k)
+
+
+def test_fit_stump_exact_z_tie_picks_smallest_feature(spark):
+    """Multi-label rows whose label sets are spread evenly over every value
+    block of every feature: each non-trivial cut is strictly worse than the
+    constant one, so the degenerate max-threshold cut wins with a z that is
+    bit-identical on all three features, and the tiebreak must pick
+    feature 1."""
+    label_sets = [[0], [0, 1], [1, 2], [0]]
+    rows = [
+        (4 * b + j, [float(b), float((b + j) % 3), float((2 * b + j) % 3)], ls)
+        for b in range(3)
+        for j, ls in enumerate(label_sets)
+    ]
+    emb = spark.createDataFrame(
+        rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>, labels ARRAY<INT>"
+    )
+    k, m = 3, len(rows)
+    weighted = boosting.init_weights(boosting.mlp_long_multi(emb, k), m, k)
+    feats = boosting.explode_features(emb)
+    zs = boosting.stump_z(boosting.stump_class_weights(weighted, feats)).collect()
+    z_min = min(r["z"] for r in zs)
+    tied = sorted(r["feature"] for r in zs if r["z"] == z_min)
+    assert tied == [1, 2, 3], "fixture must tie exactly on all features"
+    stump = _assert_matches_relational(weighted, feats, m, k)
+    assert (stump.feature, stump.threshold) == (1, 2.0)
+
+
+def test_fit_stump_job_count(stump_unit, spark):
+    """Regression guard, counted by Spark itself: one stump search is a
+    single chain that ends in one 1-row collect."""
+    emb, weighted, feats = stump_unit
+    sc = spark.sparkContext
+    group = "test_fit_stump_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        boosting.fit_stump(weighted, feats, m=6, num_classes=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs == 6, f"fit_stump launched {n_jobs} Spark jobs"
+
+
+def test_train_skips_final_reweight(spark, monkeypatch):
+    """No search reads the weights after the last round, so train(T)
+    reweights exactly T-1 times."""
+    calls = []
+    real = boosting.update_weights
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(boosting, "update_weights", counting)
+    rows = [(i, [(i % 9) / 9.0, float(i % 2)], i % 3) for i in range(30)]
+    emb = spark.createDataFrame(
+        rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>, label INT"
+    )
+    stumps = boosting.train(spark, emb, num_rounds=3, num_classes=3)
+    assert len(stumps) == 3
+    assert len(calls) == 2
+
+
+def test_empty_search_frame_names_the_round(stump_unit, spark):
+    emb, _, _ = stump_unit
+    with pytest.raises(ValueError, match="round 0"):
+        boosting.train(
+            spark, emb, num_rounds=2, num_classes=2,
+            sample_pred=lambda t: F.lit(False),
+        )
+
+
 def test_weight_update_normalizes(stump_unit, spark):
     emb, weighted, feats = stump_unit
     stump = boosting.fit_stump(weighted, feats, m=6, num_classes=2)
