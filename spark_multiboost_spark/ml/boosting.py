@@ -10,11 +10,15 @@ mount was empty at survey time, SURVEY.md §0):
   relational op.
 - DecisionStumpAlgorithm.run [R] .../baselearners/DecisionStump.scala ->
   :func:`fit_stump`: candidate cuts (A3) + prefix-sum threshold search (A4)
-  + Z-criterion scoring (A5) + argmin (A6), in one chain.
+  + Z-criterion scoring (A5) + argmin (A6), in one chain.  A4's W_+/W_-
+  cut masses are one kernel, :func:`_cut_masses`: per feature with the K
+  classes as columns here, per (feature, class) in the long-form
+  ``*_class_weights`` frames.
 - AdaBoostMHAlgorithm.run [R] .../stronglearners/AdaBoostMH.scala ->
   :func:`train` (A10): driver loop, weight update + normalization (A8),
   localCheckpoint per round (plan truncation — our analogue of the
-  reference's per-round re-cache).
+  reference's per-round re-cache).  The sampleRate of A12 is one hash
+  predicate on (id, seed + t) per round.
 - AdaBoostMHModel.predict [R] -> :func:`score_model` (A9): broadcast stump
   table join + hash agg.
 
@@ -29,9 +33,11 @@ Scale posture (SURVEY §4.2): :func:`fit_stump` pre-aggregates weights by
 (feature, value) with the K classes folded into 2K columns BEFORE the window
 prefix-sum, so the window input is |distinct values| rows per feature, not
 m x K; the per-feature window is a d-way shuffle (it was d x K with the
-long-form (feature, class) window), and :func:`stump_class_weights_salted`
-is the way out when one feature is skewed. Feature indices are 1-based
-everywhere (matches SQL element_at/list indexing in both engines).
+long-form (feature, class) window), and the kernel's ``n_buckets`` salting
+(:func:`stump_class_weights_salted`) is the way out when one feature is
+skewed.  Instance sampling is a filter pushed into the search's scan, never
+a sampled-id join.  Feature indices are 1-based everywhere (matches SQL
+element_at/list indexing in both engines).
 """
 
 from __future__ import annotations
@@ -98,44 +104,116 @@ def explode_features(emb: DataFrame) -> DataFrame:
     ).withColumn("feature", F.col("feature") + 1)
 
 
-def stump_class_weights(weighted: DataFrame, feats: DataFrame) -> DataFrame:
-    """A3+A4: for every candidate cut (feature, threshold=observed value) and
-    class, the Schapire-Singer weight masses W_+ / W_-.
+def _side_masses(
+    rows: DataFrame, keys: list[str], classes: range | None = None
+) -> DataFrame:
+    """Per group of ``keys``, the weight mass with y = +1 (``sp``) and with
+    y = -1 (``sm``) — the map-side combine in front of every cut search.
+    With ``classes`` the K classes fold into 2K columns ``sp_l`` / ``sm_l``
+    instead, so ``class`` is not a key."""
+    tags = [("", None)] if classes is None else [(f"_{l}", l) for l in classes]
 
-    Pipeline: join exploded features with the weighted long frame on id
-    (m*d x K rows), pre-aggregate to (feature, value, class) — the map-side
-    combine that keeps the window small — then one cumulative-sum window per
-    (feature, class) ordered by value.
-    """
-    joined = feats.join(weighted, "id")
-    grouped = joined.groupBy("feature", "value", "class").agg(
-        F.sum(F.when(F.col("y") == 1, F.col("weight")).otherwise(0.0)).alias("swp"),
-        F.sum(F.when(F.col("y") == -1, F.col("weight")).otherwise(0.0)).alias("swm"),
+    def mass(y: int, l: int | None) -> Column:
+        hit = F.col("y") == y
+        if l is not None:
+            hit = (F.col("class") == l) & hit
+        return F.sum(F.when(hit, F.col("weight")).otherwise(0.0))
+
+    return rows.groupBy(*keys).agg(
+        *[mass(1, l).alias(f"sp{s}") for s, l in tags],
+        *[mass(-1, l).alias(f"sm{s}") for s, l in tags],
     )
+
+
+def _cut_masses(
+    grouped: DataFrame,
+    part: list[str],
+    suffixes: list[str],
+    n_buckets: int | None = None,
+    emit: Callable[[list[Column], list[Column]], list[Column]] | None = None,
+) -> DataFrame:
+    """A4: the Schapire-Singer cut masses, written once.
+
+    ``grouped`` holds one row per (``part``, value), each value a candidate
+    threshold, with side masses ``sp{s}`` / ``sm{s}`` per suffix s
+    (:func:`_side_masses`).  Prefix (p_) and total (t_) sums over value
+    within ``part`` give, with phi = +1 above the cut, W_+ = t_sp - p_sp +
+    p_sm and W_- = t_sm - p_sm + p_sp.  Returns (``part``, threshold,
+    w_plus{s}, w_minus{s}); ``emit(w_plus, w_minus)`` replaces the W_±
+    columns for a caller that reads each of them twice (:func:`fit_stump`),
+    which then needs no projection between the window and its own columns.
+
+    ``n_buckets`` salts the prefix window by a monotone value-range bucket
+    (SURVEY §4.2 item 2): bucket offsets and totals come from the tiny
+    (``part``, bucket) frame, so a partition with ~m distinct values feeds
+    a window of fan-in ~m/B, not m.  Offset + within-bucket prefix ==
+    global prefix (q_a4_prefix_weights_salted checks it against DuckDB)."""
+    sums = [f"{side}{s}" for s in suffixes for side in ("sp", "sm")]
+    keys = list(part)
+    if n_buckets is not None:
+        # embedding values are O(1); floor(v*B/4) spreads them over ~2B
+        # buckets while preserving value order
+        bucket = F.floor(F.col("value") * (n_buckets / 4.0))
+        grouped = grouped.withColumn("bucket", bucket)
+        keys.append("bucket")
     w_cum = (
-        Window.partitionBy("feature", "class")
+        Window.partitionBy(*keys)
         .orderBy("value")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    w_tot = Window.partitionBy("feature", "class")
+    prefix = [F.sum(c).over(w_cum) for c in sums]
+    if n_buckets is None:
+        # the totals reuse the prefix ordering, so p_ and t_ share one operator
+        w_tot = w_cum.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        total = [F.sum(c).over(w_tot) for c in sums]
+    else:
+        w_b = Window.partitionBy(*part).orderBy("bucket")
+        w_off = w_b.rowsBetween(Window.unboundedPreceding, -1)
+        w_all = w_b.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        buckets = grouped.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in sums])
+        offsets = buckets.select(
+            *keys,
+            *[F.coalesce(F.sum(c).over(w_off), F.lit(0.0)).alias(f"o_{c}") for c in sums],
+            *[F.sum(c).over(w_all).alias(f"t_{c}") for c in sums],
+        )
+        grouped = grouped.join(offsets, keys)
+        prefix = [F.col(f"o_{c}") + pre for c, pre in zip(sums, prefix)]
+        total = [F.col(f"t_{c}") for c in sums]
     cum = grouped.select(
-        "feature",
+        *part,
         F.col("value").alias("threshold"),
-        "class",
-        F.sum("swp").over(w_cum).alias("p_plus"),
-        F.sum("swm").over(w_cum).alias("p_minus"),
-        F.sum("swp").over(w_tot).alias("t_plus"),
-        F.sum("swm").over(w_tot).alias("t_minus"),
+        *[
+            col.alias(f"{p}{c}")
+            for c, pre, tot in zip(sums, prefix, total)
+            for p, col in (("p_", pre), ("t_", tot))
+        ],
     )
-    # phi = +1 above the threshold: correct side mass combines the positives
-    # above the cut with the negatives at/below it
-    return cum.select(
-        "feature",
-        "threshold",
-        "class",
-        (F.col("t_plus") - F.col("p_plus") + F.col("p_minus")).alias("w_plus"),
-        (F.col("t_minus") - F.col("p_minus") + F.col("p_plus")).alias("w_minus"),
-    )
+
+    def side(a: str, b: str) -> list[Column]:
+        # phi = +1 above the cut: side a's mass above it, side b's at/below it
+        return [
+            F.col(f"t_{a}{s}") - F.col(f"p_{a}{s}") + F.col(f"p_{b}{s}") for s in suffixes
+        ]
+
+    w_plus, w_minus = side("sp", "sm"), side("sm", "sp")
+    out = emit(w_plus, w_minus) if emit else [
+        *[wp.alias(f"w_plus{s}") for s, wp in zip(suffixes, w_plus)],
+        *[wm.alias(f"w_minus{s}") for s, wm in zip(suffixes, w_minus)],
+    ]
+    return cum.select(*part, "threshold", *out)
+
+
+def stump_class_weights(weighted: DataFrame, feats: DataFrame) -> DataFrame:
+    """A3+A4: for every candidate cut (feature, threshold=observed value) and
+    class, the Schapire-Singer weight masses W_+ / W_-, as rows
+    (feature, class, threshold, w_plus, w_minus).
+
+    Join exploded features with the weighted long frame on id (m*d x K
+    rows), pre-aggregate to (feature, value, class), then the cut-mass
+    kernel with one prefix window per (feature, class) ordered by value.
+    """
+    grouped = _side_masses(feats.join(weighted, "id"), ["feature", "value", "class"])
+    return _cut_masses(grouped, ["feature", "class"], [""])
 
 
 def uniform_class_weights(
@@ -145,18 +223,16 @@ def uniform_class_weights(
     pure function of the scan, so the feats-x-weights join of
     :func:`stump_class_weights` fuses away — one pass over the source
     explodes (feature, class) pairs directly, saving both join shuffles.
-    The training loop keeps the join because its weights evolve; this is
-    the plan you want wherever weights are derivable (first round,
+    The same kernel then runs on the pre-aggregated rows.  This is the
+    plan you want wherever weights are derivable (first round,
     re-initialization, uniform-importance scoring). Numbers are identical
     to the join formulation."""
     base = (
         emb.select(
-            F.col("vec_id").alias("id"),
             "label",
             F.posexplode(F.slice("embedding", 1, num_features)).alias("f0", "value"),
         )
         .select(
-            "id",
             "label",
             (F.col("f0") + 1).alias("feature"),
             "value",
@@ -170,104 +246,19 @@ def uniform_class_weights(
             F.lit(1.0 / (m * num_classes)).alias("weight"),
         )
     )
-    grouped = base.groupBy("feature", "value", "class").agg(
-        F.sum(F.when(F.col("y") == 1, F.col("weight")).otherwise(0.0)).alias("swp"),
-        F.sum(F.when(F.col("y") == -1, F.col("weight")).otherwise(0.0)).alias("swm"),
-    )
-    w_cum = (
-        Window.partitionBy("feature", "class")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_tot = Window.partitionBy("feature", "class")
-    cum = grouped.select(
-        "feature",
-        F.col("value").alias("threshold"),
-        "class",
-        F.sum("swp").over(w_cum).alias("p_plus"),
-        F.sum("swm").over(w_cum).alias("p_minus"),
-        F.sum("swp").over(w_tot).alias("t_plus"),
-        F.sum("swm").over(w_tot).alias("t_minus"),
-    )
-    return cum.select(
-        "feature",
-        "threshold",
-        "class",
-        (F.col("t_plus") - F.col("p_plus") + F.col("p_minus")).alias("w_plus"),
-        (F.col("t_minus") - F.col("p_minus") + F.col("p_plus")).alias("w_minus"),
-    )
+    grouped = _side_masses(base, ["feature", "value", "class"])
+    return _cut_masses(grouped, ["feature", "class"], [""])
 
 
 def stump_class_weights_salted(
     weighted: DataFrame, feats: DataFrame, n_buckets: int = 8
 ) -> DataFrame:
-    """A4 at extreme scale (SURVEY §4.2 item 2): the per-(feature, class)
-    prefix-sum window above puts ALL of a feature's rows in one window
-    partition — the skew wall when one feature has ~m distinct values and m
-    is 10^9. This variant salts the window by a value-range bucket (any
-    monotone value->bucket map keeps prefix order):
-
-      stage 1: per-(feature, class, bucket) partial sums        (map-side)
-      stage 2: running bucket offsets over the TINY d*K*B frame  (window)
-      stage 3: within-bucket prefix sums + offset               (window,
-               fan-in bounded by m/B instead of m)
-
-    Weights are summable, so offset + within-bucket prefix == global
-    prefix; equality with the unsalted operator is oracle-checked
-    (q_a4_prefix_weights_salted shares q_a4's DuckDB SQL).
-    """
-    joined = feats.join(weighted, "id")
-    # monotone range bucketing: embedding values are O(1); floor(v*B/4)
-    # spreads them over ~2B buckets while preserving value order
-    bucket = F.floor(F.col("value") * (n_buckets / 4.0))
-    grouped = (
-        joined.withColumn("bucket", bucket)
-        .groupBy("feature", "class", "bucket", "value")
-        .agg(
-            F.sum(F.when(F.col("y") == 1, F.col("weight")).otherwise(0.0)).alias("swp"),
-            F.sum(F.when(F.col("y") == -1, F.col("weight")).otherwise(0.0)).alias("swm"),
-        )
-    )
-    bucket_tot = grouped.groupBy("feature", "class", "bucket").agg(
-        F.sum("swp").alias("bp"), F.sum("swm").alias("bm")
-    )
-    w_off = (
-        Window.partitionBy("feature", "class")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = bucket_tot.select(
-        "feature",
-        "class",
-        "bucket",
-        F.coalesce(F.sum("bp").over(w_off), F.lit(0.0)).alias("off_p"),
-        F.coalesce(F.sum("bm").over(w_off), F.lit(0.0)).alias("off_m"),
-    )
-    w_in = (
-        Window.partitionBy("feature", "class", "bucket")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_tot = Window.partitionBy("feature", "class")
-    cum = (
-        grouped.join(offsets, ["feature", "class", "bucket"])
-        .select(
-            "feature",
-            F.col("value").alias("threshold"),
-            "class",
-            (F.col("off_p") + F.sum("swp").over(w_in)).alias("p_plus"),
-            (F.col("off_m") + F.sum("swm").over(w_in)).alias("p_minus"),
-            F.sum("swp").over(w_tot).alias("t_plus"),
-            F.sum("swm").over(w_tot).alias("t_minus"),
-        )
-    )
-    return cum.select(
-        "feature",
-        "threshold",
-        "class",
-        (F.col("t_plus") - F.col("p_plus") + F.col("p_minus")).alias("w_plus"),
-        (F.col("t_minus") - F.col("p_minus") + F.col("p_plus")).alias("w_minus"),
-    )
+    """A4 at extreme scale: :func:`stump_class_weights` with the kernel's
+    prefix window salted into ``n_buckets`` value-range buckets, so no
+    window partition holds all of a skewed feature's values (see
+    :func:`_cut_masses`).  Same rows and numbers up to summation order."""
+    grouped = _side_masses(feats.join(weighted, "id"), ["feature", "value", "class"])
+    return _cut_masses(grouped, ["feature", "class"], [""], n_buckets)
 
 
 def stump_z(class_weights: DataFrame) -> DataFrame:
@@ -314,8 +305,9 @@ def fit_stump(
       1. ``feats ⨝ weighted`` on id (m·d·K rows);
       2. ``groupBy(feature, value)`` with the K classes folded into 2K
          conditional sums ``sp_l`` / ``sm_l`` — distinct values × d rows;
-      3. one prefix-sum window per feature, ordered by value, giving every
-         class's W_+ / W_- at each cut (window parallelism d);
+      3. :func:`_cut_masses` with one prefix-sum window per feature, ordered
+         by value, giving every class's W_+ / W_- at each cut (window
+         parallelism d);
       4. z = 2 Σ_l sqrt(W_+^l W_-^l), summed in class order, and the K
          eps-smoothed votes, both row-wise;
       5. one global ``min(struct(floor(z·1e9 + 0.5), feature, threshold,
@@ -323,10 +315,11 @@ def fit_stump(
          with no sort, no limit and no join back for the votes.
 
     The cut and votes equal the relational pieces (:func:`stump_class_weights`
-    → :func:`stump_z` → :func:`best_stump_row`) up to summation order: z
-    sums classes in class order, and repeated values' weights may add up in
-    another order, so only the last bits can differ.  A feature with ~m distinct
-    values puts all of them in one window partition; at that skew
+    → :func:`stump_z` → :func:`best_stump_row`, the same kernel per (feature,
+    class)) up to summation order: z sums classes in class order, and
+    repeated values' weights may add up in another order, so only the last
+    bits can differ.  A feature with ~m distinct values puts all of them in
+    one window partition; at that skew
     :func:`stump_class_weights_salted` is the way out.
 
     Raises ValueError when the search frame has no candidate cut (a
@@ -335,55 +328,19 @@ def fit_stump(
     eps = 1.0 / (2.0 * m * num_classes)
     classes = range(num_classes)
 
-    def mass(l: int, y: int) -> Column:
-        hit = (F.col("class") == l) & (F.col("y") == y)
-        return F.sum(F.when(hit, F.col("weight")).otherwise(0.0))
+    def z_and_votes(w_plus: list[Column], w_minus: list[Column]) -> list[Column]:
+        z_sum = F.sqrt(w_plus[0] * w_minus[0])
+        for wp, wm in zip(w_plus[1:], w_minus[1:]):
+            z_sum = z_sum + F.sqrt(wp * wm)
+        votes = [
+            0.5 * F.log((wp + F.lit(eps)) / (wm + F.lit(eps)))
+            for wp, wm in zip(w_plus, w_minus)
+        ]
+        return [(2.0 * z_sum).alias("z"), F.array(*votes).alias("votes")]
 
-    grouped = (
-        feats.join(weighted, "id")
-        .groupBy("feature", "value")
-        .agg(
-            *[mass(l, 1).alias(f"sp_{l}") for l in classes],
-            *[mass(l, -1).alias(f"sm_{l}") for l in classes],
-        )
-    )
-    w_cum = (
-        Window.partitionBy("feature")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_tot = w_cum.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    cum = grouped.select(
-        "feature",
-        F.col("value").alias("threshold"),
-        *[
-            F.sum(f"{s}_{l}").over(w).alias(f"{p}{s}_{l}")
-            for l in classes
-            for s in ("sp", "sm")
-            for p, w in (("p_", w_cum), ("t_", w_tot))
-        ],
-    )
-    # phi = +1 above the threshold: correct side mass combines the positives
-    # above the cut with the negatives at/below it (as stump_class_weights)
-    w_plus = [
-        F.col(f"t_sp_{l}") - F.col(f"p_sp_{l}") + F.col(f"p_sm_{l}") for l in classes
-    ]
-    w_minus = [
-        F.col(f"t_sm_{l}") - F.col(f"p_sm_{l}") + F.col(f"p_sp_{l}") for l in classes
-    ]
-    z_sum = F.sqrt(w_plus[0] * w_minus[0])
-    for wp, wm in zip(w_plus[1:], w_minus[1:]):
-        z_sum = z_sum + F.sqrt(wp * wm)
-    scored = cum.select(
-        "feature",
-        "threshold",
-        (2.0 * z_sum).alias("z"),
-        F.array(
-            *[
-                0.5 * F.log((wp + F.lit(eps)) / (wm + F.lit(eps)))
-                for wp, wm in zip(w_plus, w_minus)
-            ]
-        ).alias("votes"),
+    grouped = _side_masses(feats.join(weighted, "id"), ["feature", "value"], classes)
+    scored = _cut_masses(
+        grouped, ["feature"], [f"_{l}" for l in classes], emit=z_and_votes
     )
     key = F.struct(
         F.floor(F.col("z") * 1e9 + 0.5).alias("zq"), "feature", "threshold", "z", "votes"
@@ -457,6 +414,18 @@ def update_weights(
     )
 
 
+def _hash_sample(fraction: float, seed: int) -> Callable[[int], Column]:
+    """``sample_fraction`` as a ``sample_pred``: round t keeps the ids whose
+    xxhash64 with ``seed`` + t lands in the lowest ``fraction`` of 2^20
+    buckets, independently per round.  The hash takes an id of any type and
+    pmod keeps the bucket in [0, 2^20), so no step can overflow int64 (ANSI
+    mode included)."""
+    buckets = 1 << 20
+    return lambda t: (
+        F.pmod(F.xxhash64("id", F.lit(seed + t)), F.lit(buckets)) < fraction * buckets
+    )
+
+
 def train(
     spark: SparkSession,
     emb: DataFrame,
@@ -481,14 +450,12 @@ def train(
     multi-label column (BoosTexter label sets); None = single-label
     ``label``.
 
-    ``sample_pred`` (VERDICT r10 item 2) is the DETERMINISTIC instance
-    sampler: a callable ``t -> boolean Column over 'id'`` applied as a plain
-    filter on the weighted frame before round t's stump search.  Unlike
-    ``sample_fraction`` (seeded RNG, engine-specific), a pure-arithmetic
-    predicate is expressible identically in SQL, making sampled training
-    exactly oracle-checkable — and it is also the better 100-TB shape: a
-    pushed-down filter instead of a sampled-id broadcast join.  Mutually
-    exclusive with ``sample_fraction`` (predicate wins if both are set).
+    Instance sampling is one pushed-down filter: ``sample_pred``, a callable
+    ``t -> boolean Column over 'id'``, filters the weighted frame before
+    round t's stump search (VERDICT r10 item 2: pure arithmetic that SQL
+    repeats makes sampled training oracle-checkable).  ``sample_fraction``
+    builds it as :func:`_hash_sample` of (id, ``seed`` + t); ``sample_pred``
+    wins if both are set.
     """
     if label_set_col is not None:
         emb = emb.select(
@@ -503,6 +470,8 @@ def train(
     weighted = init_weights(mlp, m, num_classes)
     weighted = weighted.localCheckpoint(eager=True)
 
+    if sample_pred is None and sample_fraction is not None:
+        sample_pred = _hash_sample(sample_fraction, seed)
     stumps: list[Stump] = []
     # loop-invariant: feature count never changes between rounds, so the
     # one action that computes it runs once, not once per round
@@ -515,11 +484,6 @@ def train(
         search_w, search_f = weighted, feats
         if sample_pred is not None:
             search_w = weighted.filter(sample_pred(t))
-        elif sample_fraction is not None:
-            ids = emb.select("vec_id").sample(sample_fraction, seed + t).select(
-                F.col("vec_id").alias("id")
-            )
-            search_w = weighted.join(F.broadcast(ids), "id")
         if feature_fraction is not None:
             keep = max(1, int(n_feats * feature_fraction))
             # deterministic per-round rotation of the feature subset

@@ -44,7 +44,8 @@ class _ABParams(Params):
     seed = Param(Params._dummy(), "seed", "sampling seed", TypeConverters.toInt)
     sampleFraction = Param(
         Params._dummy(), "sampleFraction",
-        "A12 per-round instance subsample fraction (None = off)",
+        "A12 per-round instance subsample fraction, picked by a hash of "
+        "(id, seed + t) (None = off)",
         TypeConverters.toFloat,
     )
 

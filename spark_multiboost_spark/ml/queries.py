@@ -597,7 +597,7 @@ def train_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("q_a12_train_sampled", oracle=None, group="A")
 def train_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12: stochastic boosting — per-round instance subsampling
+    """A12: stochastic boosting — per-round hash subsample of (id, seed + t)
     (reference: DecisionStumpAlgorithm sampleRate param [R], confidence M)."""
     emb = _emb(spark, sf_dir)
     stumps = boosting.train(
@@ -862,18 +862,12 @@ def sparse_stump_z(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id", F.explode("smap").alias("feature", "value"))
         .filter(F.col("feature") <= 4)
     )
-    obs = sp.join(weighted, "id").groupBy("feature", "value", "class").agg(
-        F.sum(F.when(F.col("y") == 1, F.col("weight")).otherwise(0.0)).alias("swp"),
-        F.sum(F.when(F.col("y") == -1, F.col("weight")).otherwise(0.0)).alias("swm"),
-    )
+    obs = boosting._side_masses(sp.join(weighted, "id"), ["feature", "value", "class"])
     # implicit-zero mass: class totals are feature-independent (tiny agg),
     # observed mass per (feature, class) subtracts off
-    totals = weighted.groupBy("class").agg(
-        F.sum(F.when(F.col("y") == 1, F.col("weight")).otherwise(0.0)).alias("tp"),
-        F.sum(F.when(F.col("y") == -1, F.col("weight")).otherwise(0.0)).alias("tm"),
-    )
+    totals = boosting._side_masses(weighted, ["class"])
     obs_tot = obs.groupBy("feature", "class").agg(
-        F.sum("swp").alias("op"), F.sum("swm").alias("om")
+        F.sum("sp").alias("op"), F.sum("sm").alias("om")
     )
     features = spark.range(1, 5).select(F.col("id").cast("int").alias("feature"))
     zero = (
@@ -883,33 +877,11 @@ def sparse_stump_z(spark: SparkSession, sf_dir: str) -> DataFrame:
             "feature",
             F.lit(0.0).alias("value"),
             "class",
-            (F.col("tp") - F.coalesce(F.col("op"), F.lit(0.0))).alias("swp"),
-            (F.col("tm") - F.coalesce(F.col("om"), F.lit(0.0))).alias("swm"),
+            (F.col("sp") - F.coalesce(F.col("op"), F.lit(0.0))).alias("sp"),
+            (F.col("sm") - F.coalesce(F.col("om"), F.lit(0.0))).alias("sm"),
         )
     )
-    grouped = obs.unionByName(zero)
-    w_cum = (
-        Window.partitionBy("feature", "class")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_tot = Window.partitionBy("feature", "class")
-    cum = grouped.select(
-        "feature",
-        F.col("value").alias("threshold"),
-        "class",
-        F.sum("swp").over(w_cum).alias("p_plus"),
-        F.sum("swm").over(w_cum).alias("p_minus"),
-        F.sum("swp").over(w_tot).alias("t_plus"),
-        F.sum("swm").over(w_tot).alias("t_minus"),
-    )
-    cw = cum.select(
-        "feature",
-        "threshold",
-        "class",
-        (F.col("t_plus") - F.col("p_plus") + F.col("p_minus")).alias("w_plus"),
-        (F.col("t_minus") - F.col("p_minus") + F.col("p_plus")).alias("w_minus"),
-    )
+    cw = boosting._cut_masses(obs.unionByName(zero), ["feature", "class"], [""])
     return boosting.stump_z(cw).select(
         "feature", "threshold", F.round("z", 9).alias("z")
     )
@@ -1734,8 +1706,8 @@ def estimator_multilabel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# A12 exact-oracle twin (VERDICT r10 item 2): sampled training with a
-# DETERMINISTIC hash-based subsample instead of seeded RNG, so the full
+# A12 exact-oracle twin (VERDICT r10 item 2): sampled training with an
+# integer-arithmetic subsample both engines compute, so the full
 # sampled training round is SQL-expressible in BOTH engines and hash-checked
 # end-to-end via the D7 replay-CTE pattern.
 # ---------------------------------------------------------------------------
@@ -1779,8 +1751,8 @@ def train_hash_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A12 exact-oracle twin (VERDICT r10 item 2): stochastic boosting —
     per-round instance AND feature subsampling (the reference's sampleRate /
     featureRate pair [R] DecisionStumpAlgorithm, reconstructed, mount empty)
-    — made hash-checkable by replacing the seeded RNG with a deterministic
-    multiplicative-congruential selector both engines compute identically.
+    — made hash-checkable by a deterministic multiplicative-congruential
+    selector both engines compute identically.
     Train {D7_ROUNDS} rounds on embedding[1..{D7_FEATS}] where each round's
     stump SEARCH sees only ids with (id*MULT + t*STEP) % MOD < THRESH (80%)
     and 3 of the 4 features (rotating subset); the A8 weight update still
@@ -1789,8 +1761,8 @@ def train_hash_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled training as unrolled materialized CTEs with the same per-round
     WHERE restriction on the search frame, then scores — so the sampled
     model's actual predictions are value-hashed against DuckDB, upgrading
-    A12 from rows-only to an exact oracle (the seed-42 RNG twins stay
-    registered as the engine-specific contract rows).
+    A12 from rows-only to an exact oracle (q_a12_train_sampled, the
+    xxhash64 ``sample_fraction`` twin, stays a rows-only contract row).
 
     Determinism: same quantized argmin key as D7 (floor(z*1e9+0.5), feature,
     threshold).  Measured top-2 key gaps before registration (the round-11

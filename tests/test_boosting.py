@@ -132,6 +132,32 @@ def test_fit_stump_job_count(stump_unit, spark):
     assert n_jobs == 6, f"fit_stump launched {n_jobs} Spark jobs"
 
 
+@pytest.mark.parametrize(
+    "sampling", [{}, {"sampleFraction": 0.5}], ids=["plain", "sampled"]
+)
+def test_fit_job_count(spark, sampling):
+    """Regression guard, counted by Spark itself: one AdaBoostMHClassifier
+    fit at T=2 launches 19 Spark jobs, and ``sampleFraction``, a filter
+    inside each stump search, adds none."""
+    from spark_multiboost_spark.ml.estimator import AdaBoostMHClassifier
+
+    rows = [
+        (i, [(i % 9) / 9.0, float(i % 2), ((i * 7) % 5) / 5.0], i % 3) for i in range(30)
+    ]
+    emb = spark.createDataFrame(
+        rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>, label INT"
+    )
+    sc = spark.sparkContext
+    group = f"test_fit_job_count_{len(sampling)}"
+    sc.setJobGroup(group, group)
+    try:
+        AdaBoostMHClassifier(numRounds=2, numClasses=3, **sampling).fit(emb)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs == 19, f"fit launched {n_jobs} Spark jobs"
+
+
 def test_train_skips_final_reweight(spark, monkeypatch):
     """No search reads the weights after the last round, so train(T)
     reweights exactly T-1 times."""
@@ -231,10 +257,11 @@ def test_estimator_pipeline(spark, sf_dir):
 
 def test_a12_sampled_training_deterministic(spark, sf_dir):
     """A12 regression lock (VERDICT r8 item 7): sampled training with a
-    fixed seed is deterministic within Spark (sample() is a seeded hash of
-    the row content), so the exact chosen stumps are pinned here — the
-    oracle cannot cross engines for seeded sampling, but the choice must
-    never drift across Spark versions/partitionings unnoticed."""
+    fixed seed is deterministic (each round keeps the ids whose xxhash64
+    with seed + t is in the sampled fraction — a pure function of the id),
+    so the exact chosen stumps are pinned here — DuckDB has no Spark
+    xxhash64 to replay it, but the choice must never drift across Spark
+    versions/partitionings unnoticed."""
     from spark_multiboost_spark.session import load_tables
 
     emb = load_tables(spark, sf_dir)["embeddings"]
@@ -252,8 +279,36 @@ def test_a12_sampled_training_deterministic(spark, sf_dir):
     if sf_dir.rstrip("/").endswith("sf0.001"):
         assert picks[0] == [
             (1, 0.3503933548927307),
-            (57, -0.12729206681251526),
+            (11, -0.024793246760964394),
         ], f"sampled-training stump drift: {picks[0]}"
+
+
+def test_a12_fraction_sampler_binds(spark, sf_dir):
+    """``sample_fraction`` non-vacuity: each round's hash predicate keeps a
+    strict subset of the ids near the fraction, the two rounds keep
+    different ids, and the sampler takes any id type — a STRING id column
+    trains through the estimator, and BIGINT ids near 2^62 train where
+    multiplying the id by a hash constant would overflow under ANSI."""
+    from spark_multiboost_spark.ml.estimator import AdaBoostMHClassifier
+    from spark_multiboost_spark.session import load_tables
+
+    emb = load_tables(spark, sf_dir)["embeddings"]
+    ids = emb.select(F.col("vec_id").alias("id"))
+    m = ids.count()
+    pred = boosting._hash_sample(0.5, 42)
+    picked = [ids.filter(pred(t)).count() for t in range(2)]
+    # 4 binomial standard deviations around m/2
+    assert all(abs(p - m / 2) < 2 * math.sqrt(m) for p in picked), (picked, m)
+    assert ids.filter(pred(0) != pred(1)).count() > 0, "rounds keep the same ids"
+
+    str_emb = emb.withColumn("vec_id", F.concat(F.lit("doc-"), F.col("vec_id")))
+    clf = AdaBoostMHClassifier(numRounds=2, numClasses=10, sampleFraction=0.5)
+    assert clf.fit(str_emb).transform(str_emb).count() == m
+    big = emb.withColumn("vec_id", F.col("vec_id") + F.lit(2**62))
+    stumps = boosting.train(
+        spark, big, num_rounds=2, num_classes=10, sample_fraction=0.5, seed=42
+    )
+    assert len(stumps) == 2
 
 
 def test_a12_hash_sample_binds(spark, sf_dir):

@@ -5,7 +5,8 @@ correctness story leans on:
    the same sum at ANY partitioning (this is what makes results
    reproducible on a cluster);
 2. the salted two-stage prefix-sum equals the global prefix-sum on
-   arbitrary weighted frames (not just the fixtures);
+   arbitrary weighted frames (not just the fixtures), and both equal the
+   cut masses of a numpy cumsum;
 3. the blocked-matmul scorer's strict left-to-right accumulation is
    bit-identical to a scalar sequential loop (the DuckDB/Catalyst fold).
 """
@@ -83,6 +84,74 @@ def test_salted_prefix_equals_global(spark, data):
     plain = norm(boosting.stump_class_weights(weighted, feats))
     salted = norm(boosting.stump_class_weights_salted(weighted, feats, n_buckets=3))
     assert plain == salted
+
+
+def _numpy_cut_masses(x, y, w):
+    """W_+ / W_- per (feature, class, threshold) from sorted distinct values
+    and cumsums: x is (n, d) feature values, y and w are (n, K) labels in
+    {+1, -1} and weights; phi = +1 above the threshold."""
+    out = {}
+    for j in range(x.shape[1]):
+        thr, at = np.unique(x[:, j], return_inverse=True)
+        for l in range(y.shape[1]):
+            pos = np.bincount(at, np.where(y[:, l] == 1, w[:, l], 0.0), len(thr))
+            neg = np.bincount(at, np.where(y[:, l] == -1, w[:, l], 0.0), len(thr))
+            # mass at or below each cut, and above it
+            lo_p, lo_m = np.cumsum(pos), np.cumsum(neg)
+            hi_p, hi_m = pos.sum() - lo_p, neg.sum() - lo_m
+            for v, wp, wm in zip(thr, hi_p + lo_m, hi_m + lo_p):
+                out[(j + 1, l, float(v))] = (wp, wm)
+    return out
+
+
+@settings(max_examples=6, deadline=None)
+@given(
+    k=st.integers(3, 5),
+    rows=st.lists(
+        st.tuples(
+            st.lists(st.integers(0, 3), min_size=2, max_size=2),  # value levels
+            st.lists(st.sampled_from([1, -1]), min_size=5, max_size=5),  # y
+            st.lists(st.floats(0.01, 1.0), min_size=5, max_size=5),  # weight
+        ),
+        min_size=5,
+        max_size=24,
+    ),
+    n_buckets=st.integers(1, 8),
+)
+def test_class_weights_match_numpy_cumsum(spark, k, rows, n_buckets):
+    """The cut-mass kernel against an independent numpy reference, on frames
+    with repeated values (4 levels per feature), non-uniform weights and
+    K >= 3: stump_class_weights and its salted form within 1e-12."""
+    from spark_multiboost_spark.ml import boosting
+
+    x = np.array([[0.7 * (v - 1.5) for v in lv] for lv, _, _ in rows])
+    y = np.array([ys[:k] for _, ys, _ in rows])
+    w = np.array([ws[:k] for _, _, ws in rows])
+    n = len(rows)
+    weighted = spark.createDataFrame(
+        [(i, l, int(y[i, l]), float(w[i, l])) for i in range(n) for l in range(k)],
+        "id bigint, class int, y int, weight double",
+    )
+    feats = spark.createDataFrame(
+        [(i, j + 1, float(x[i, j])) for i in range(n) for j in range(2)],
+        "id bigint, feature int, value double",
+    )
+    want = _numpy_cut_masses(x, y, w)
+    for cw in (
+        boosting.stump_class_weights(weighted, feats),
+        boosting.stump_class_weights_salted(weighted, feats, n_buckets=n_buckets),
+    ):
+        got = {
+            (r["feature"], r["class"], r["threshold"]): (r["w_plus"], r["w_minus"])
+            for r in cw.collect()
+        }
+        assert got.keys() == want.keys()
+        for key, (wp, wm) in want.items():
+            assert abs(got[key][0] - wp) < 1e-12 and abs(got[key][1] - wm) < 1e-12, (
+                key,
+                got[key],
+                (wp, wm),
+            )
 
 
 @settings(max_examples=30, deadline=None)
