@@ -7,18 +7,22 @@ mount was empty at survey time, SURVEY.md §0):
   [R] .../multilabel/MultiLabeledPoint.scala -> long-form frame
   (id, class, y, weight) + a separate exploded feature frame (id, feature,
   value); SURVEY §1.2 chose the long form so every boosting step is a plain
-  relational op.
+  relational op.  :func:`train` holds the same weights as K columns of the
+  example row instead (:func:`_weight_rows`).
 - DecisionStumpAlgorithm.run [R] .../baselearners/DecisionStump.scala ->
-  :func:`fit_stump`: candidate cuts (A3) + prefix-sum threshold search (A4)
-  + Z-criterion scoring (A5) + argmin (A6), in one chain.  A4's W_+/W_-
+  :func:`fit_stump` / :func:`_best_cut`: candidate cuts (A3) + prefix-sum
+  threshold search (A4) + Z-criterion scoring (A5) + argmin (A6), in one
+  chain that also returns the round's normalizer.  A4's W_+/W_-
   cut masses are one kernel, :func:`_cut_masses`: per feature with the K
   classes as columns here, per (feature, class) in the long-form
   ``*_class_weights`` frames.
 - AdaBoostMHAlgorithm.run [R] .../stronglearners/AdaBoostMH.scala ->
-  :func:`train` (A10): driver loop, weight update + normalization (A8),
-  localCheckpoint per round (plan truncation — our analogue of the
-  reference's per-round re-cache).  The sampleRate of A12 is one hash
-  predicate on (id, seed + t) per round.
+  :func:`train` (A10): driver loop with no weight state.  The weights
+  (A8's update + normalization) are a row-wise closed-form expression of
+  the literal stumps found so far, so nothing is carried, joined or
+  checkpointed from round to round (the reference re-caches its weighted
+  RDD per round).  The sampleRate of A12 is one hash predicate on
+  (id, seed + t) per round.
 - AdaBoostMHModel.predict [R] -> :func:`score_model` (A9): broadcast stump
   table join + hash agg.
 
@@ -27,22 +31,28 @@ Math (Schapire & Singer 1999, BoosTexter 2000):
   W_+^l = sum_i w_il [y_il = phi(x_i)],  W_-^l = sum_i w_il [y_il != phi(x_i)]
   votes v_l = 0.5 ln((W_+^l + eps) / (W_-^l + eps)),  eps = 1/(2mK)
   Z(j,theta) = 2 sum_l sqrt(W_+^l W_-^l)   (minimized over candidates)
-  weight update: w' = w exp(-y v_l phi(x)) / Z_norm
+  weight update: w' = w exp(-y v_l phi(x)) / Z_t,
+    Z_t = sum_l (W_+^l e^{-v_l} + W_-^l e^{v_l})  (the exact normalizer)
+  closed form: D_t(i,l) = exp(-y_il H_{t-1}(x_i)[l] - sum_{s<t} ln Z_s) / (mK)
 
-Scale posture (SURVEY §4.2): :func:`fit_stump` pre-aggregates weights by
-(feature, value) with the K classes folded into 2K columns BEFORE the window
-prefix-sum, so the window input is |distinct values| rows per feature, not
-m x K; the per-feature window is a d-way shuffle (it was d x K with the
-long-form (feature, class) window), and the kernel's ``n_buckets`` salting
-(:func:`stump_class_weights_salted`) is the way out when one feature is
-skewed.  Instance sampling is a filter pushed into the search's scan, never
-a sampled-id join.  Feature indices are 1-based everywhere (matches SQL
-element_at/list indexing in both engines).
+Scale posture (SURVEY §4.2): a training round scans the persisted examples
+once, computes the K weights per row (m·K exp, before the feature explode)
+and pre-aggregates them by (feature, value) with the K classes folded into
+2K columns BEFORE the window prefix-sum, so the window input is |distinct
+values| rows per feature, not m x K; the per-feature window is a d-way
+shuffle (it was d x K with the long-form (feature, class) window), and the
+kernel's ``n_buckets`` salting (:func:`stump_class_weights_salted`) is the
+way out when one feature is skewed.  The weight expression grows by one
+term per round (O(t) per row), the price of carrying no state.  Instance
+sampling is a mask inside the search's aggregate, never a sampled-id join.
+Feature indices are 1-based everywhere (matches SQL element_at/list
+indexing in both engines).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import math
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -58,6 +68,16 @@ class Stump:
     threshold: float
     z: float
     votes: list[float]  # length K; h(x)[l] = votes[l] * phi(x)
+    # Z_t = sum_il D_t(i,l) exp(-y_il h(x_i)[l]) over the searched rows, the
+    # round's exact normalizer; NaN on a hand-built stump
+    norm: float = math.nan
+
+
+def _label_sign(cls: Column, label_set: bool = False) -> Column:
+    """y in {+1, -1}: +1 iff class ``cls`` is the row's ``label`` (or is in
+    its ``labels`` set)."""
+    hit = F.array_contains("labels", cls) if label_set else cls == F.col("label")
+    return F.when(hit, 1).otherwise(-1)
 
 
 def mlp_long(emb: DataFrame, num_classes: int = 10) -> DataFrame:
@@ -67,11 +87,7 @@ def mlp_long(emb: DataFrame, num_classes: int = 10) -> DataFrame:
         F.col("vec_id").alias("id"),
         F.explode(F.sequence(F.lit(0), F.lit(num_classes - 1))).alias("class"),
         "label",
-    ).select(
-        "id",
-        "class",
-        F.when(F.col("class") == F.col("label"), 1).otherwise(-1).alias("y"),
-    )
+    ).select("id", "class", _label_sign(F.col("class")).alias("y"))
 
 
 def mlp_long_multi(emb: DataFrame, num_classes: int = 10) -> DataFrame:
@@ -83,45 +99,122 @@ def mlp_long_multi(emb: DataFrame, num_classes: int = 10) -> DataFrame:
         F.col("vec_id").alias("id"),
         F.explode(F.sequence(F.lit(0), F.lit(num_classes - 1))).alias("class"),
         "labels",
-    ).select(
-        "id",
-        "class",
-        F.when(F.array_contains("labels", F.col("class")), 1)
-        .otherwise(-1)
-        .alias("y"),
-    )
+    ).select("id", "class", _label_sign(F.col("class"), label_set=True).alias("y"))
+
+
+def _phi(value: Column, threshold: float) -> Column:
+    """phi(x) = +1 above the cut, -1 at or below it."""
+    return F.when(value > threshold, 1.0).otherwise(-1.0)
+
+
+def _vote(s: Stump, cls: int | Column) -> Column:
+    """v_s[cls]: a literal for a class index, a lookup for a class column."""
+    if isinstance(cls, int):
+        return F.lit(s.votes[cls])
+    return F.element_at(F.array(*[F.lit(v) for v in s.votes]), cls + 1)
+
+
+def _add_stump(margins: list[Column] | None, s: Stump) -> list[Column]:
+    """H_{t+1}(x)[l] = H_t(x)[l] + v_s[l] phi_s(x) for every class l, with
+    phi_s read from the row's ``embedding``; ``None`` is H_0 = 0.  Adding
+    one stump costs O(K) column expressions, so a loop that extends H
+    round by round builds each round's weights in O(K), not O(K·t)."""
+    phi = _phi(F.element_at("embedding", s.feature), s.threshold)
+    terms = [_vote(s, l) * phi for l in range(len(s.votes))]
+    return terms if margins is None else [h + v for h, v in zip(margins, terms)]
+
+
+def _log_factor(y: Column, h: Column, log_norm: float) -> Column:
+    """A8, the one weight formula: ln of the factor exp(-y h) / Z that
+    reweights a (row, class) pair by the margin ``h`` of the stumps applied
+    and ``log_norm`` = ln Z, the log of their normalizers' product.  One
+    stump for :func:`update_weights`, every stump so far for
+    :func:`_class_weight`."""
+    return -y * h - F.lit(log_norm)
+
+
+def _class_weight(
+    y: Column, margin: Column | None, log_norm: float, m: int, num_classes: int
+) -> Column:
+    """D_t(i, l) in closed form (Schapire & Singer 1999): 1/(mK) ·
+    exp(-y H_{t-1}(x)[l] - sum_{s<t} ln Z_s), with ``margin`` = H_{t-1}[l]
+    (:func:`_add_stump`) and ``log_norm`` the sum of ln Z_s; 1/(mK) at
+    t = 0 (``margin`` None).  Log space keeps the exponent at or below
+    ln(mK), so no weight overflows however large |H| grows (a plain
+    exp(-yH) / prod Z does once |H| > 709)."""
+    w = F.lit(1.0 / (m * num_classes))
+    if margin is None:
+        return w
+    return w * F.exp(_log_factor(y, margin, log_norm))
 
 
 def init_weights(mlp: DataFrame, m: int, num_classes: int) -> DataFrame:
     """A2: uniform initial distribution D_1(i,l) = 1/(mK)."""
-    return mlp.withColumn("weight", F.lit(1.0 / (m * num_classes)))
+    uniform = _class_weight(F.col("y"), None, 0.0, m, num_classes)
+    return mlp.withColumn("weight", uniform)
+
+
+def _weight_rows(
+    emb: DataFrame,
+    margins: list[Column] | None,
+    log_norm: float,
+    m: int,
+    num_classes: int,
+    label_set: bool,
+) -> DataFrame:
+    """Round t's weights as columns of the example rows: ``emb`` (``embedding``
+    and ``label`` or ``labels``) plus ``y_l`` and ``weight_l`` = D_t(i, l)
+    for every class l, a pure function of the row and the stumps so far
+    (their ``margins`` and ``log_norm``, see :func:`_class_weight`)."""
+    classes = range(num_classes)
+    signed = emb.select(
+        "*", *[_label_sign(F.lit(l), label_set).alias(f"y_{l}") for l in classes]
+    )
+    hs = margins or [None] * num_classes
+    return signed.select(
+        "*",
+        *[
+            _class_weight(F.col(f"y_{l}"), hs[l], log_norm, m, num_classes)
+            .alias(f"weight_{l}")
+            for l in classes
+        ],
+    )
+
+
+def _explode(rows: DataFrame, *carry: Column | str) -> DataFrame:
+    """(``carry``, feature[1-based], value) from the array column ``embedding``."""
+    return rows.select(
+        *carry, F.posexplode("embedding").alias("feature", "value")
+    ).withColumn("feature", F.col("feature") + 1)
 
 
 def explode_features(emb: DataFrame) -> DataFrame:
     """A3 input: (id, feature[1-based], value) from the array column."""
-    return emb.select(
-        F.col("vec_id").alias("id"), F.posexplode("embedding").alias("feature", "value")
-    ).withColumn("feature", F.col("feature") + 1)
+    return _explode(emb, F.col("vec_id").alias("id"))
 
 
 def _side_masses(
-    rows: DataFrame, keys: list[str], classes: range | None = None
+    rows: DataFrame, keys: list[str], suffixes: Sequence[str] = ("",), kept: bool = False
 ) -> DataFrame:
-    """Per group of ``keys``, the weight mass with y = +1 (``sp``) and with
-    y = -1 (``sm``) — the map-side combine in front of every cut search.
-    With ``classes`` the K classes fold into 2K columns ``sp_l`` / ``sm_l``
-    instead, so ``class`` is not a key."""
-    tags = [("", None)] if classes is None else [(f"_{l}", l) for l in classes]
+    """Per group of ``keys``, the weight mass with y = +1 (``sp{s}``) and with
+    y = -1 (``sm{s}``) of the columns ``y{s}`` / ``weight{s}`` for every
+    suffix s — the map-side combine in front of every cut search.  With
+    ``kept`` the boolean column ``kept`` masks a second set, ``sp{s}_k`` /
+    ``sm{s}_k``, and ``n_kept`` counts the kept rows."""
 
-    def mass(y: int, l: int | None) -> Column:
-        hit = F.col("y") == y
-        if l is not None:
-            hit = (F.col("class") == l) & hit
-        return F.sum(F.when(hit, F.col("weight")).otherwise(0.0))
+    def mass(y: int, s: str, masked: bool) -> Column:
+        hit = F.col(f"y{s}") == y
+        if masked:
+            hit = hit & F.col("kept")
+        return F.sum(F.when(hit, F.col(f"weight{s}")).otherwise(0.0))
 
+    masks = [("", False)] + ([("_k", True)] if kept else [])
     return rows.groupBy(*keys).agg(
-        *[mass(1, l).alias(f"sp{s}") for s, l in tags],
-        *[mass(-1, l).alias(f"sm{s}") for s, l in tags],
+        *[mass(y, s, masked).alias(f"{side}{s}{tag}")
+          for tag, masked in masks
+          for side, y in (("sp", 1), ("sm", -1))
+          for s in suffixes],
+        *([F.count_if("kept").alias("n_kept")] if kept else []),
     )
 
 
@@ -131,6 +224,7 @@ def _cut_masses(
     suffixes: list[str],
     n_buckets: int | None = None,
     emit: Callable[[list[Column], list[Column]], list[Column]] | None = None,
+    carry: Sequence[str] = (),
 ) -> DataFrame:
     """A4: the Schapire-Singer cut masses, written once.
 
@@ -140,8 +234,9 @@ def _cut_masses(
     within ``part`` give, with phi = +1 above the cut, W_+ = t_sp - p_sp +
     p_sm and W_- = t_sm - p_sm + p_sp.  Returns (``part``, threshold,
     w_plus{s}, w_minus{s}); ``emit(w_plus, w_minus)`` replaces the W_±
-    columns for a caller that reads each of them twice (:func:`fit_stump`),
+    columns for a caller that reads each of them twice (:func:`_best_cut`),
     which then needs no projection between the window and its own columns.
+    The ``carry`` columns of ``grouped`` pass through unchanged.
 
     ``n_buckets`` salts the prefix window by a monotone value-range bucket
     (SURVEY §4.2 item 2): bucket offsets and totals come from the tiny
@@ -182,6 +277,7 @@ def _cut_masses(
     cum = grouped.select(
         *part,
         F.col("value").alias("threshold"),
+        *carry,
         *[
             col.alias(f"{p}{c}")
             for c, pre, tot in zip(sums, prefix, total)
@@ -200,7 +296,7 @@ def _cut_masses(
         *[wp.alias(f"w_plus{s}") for s, wp in zip(suffixes, w_plus)],
         *[wm.alias(f"w_minus{s}") for s, wm in zip(suffixes, w_minus)],
     ]
-    return cum.select(*part, "threshold", *out)
+    return cum.select(*part, "threshold", *carry, *out)
 
 
 def stump_class_weights(weighted: DataFrame, feats: DataFrame) -> DataFrame:
@@ -219,14 +315,12 @@ def stump_class_weights(weighted: DataFrame, feats: DataFrame) -> DataFrame:
 def uniform_class_weights(
     emb: DataFrame, num_features: int, num_classes: int, m: int
 ) -> DataFrame:
-    """A3+A4 for ROUND ONE (uniform weights): the weighted long frame is a
-    pure function of the scan, so the feats-x-weights join of
-    :func:`stump_class_weights` fuses away — one pass over the source
-    explodes (feature, class) pairs directly, saving both join shuffles.
-    The same kernel then runs on the pre-aggregated rows.  This is the
-    plan you want wherever weights are derivable (first round,
-    re-initialization, uniform-importance scoring). Numbers are identical
-    to the join formulation."""
+    """A3+A4 for ROUND ONE (uniform weights): the t = 0 case of the
+    closed-form weights (:func:`_class_weight` with no stumps), so the
+    feats-x-weights join of :func:`stump_class_weights` fuses away — one
+    pass over the source explodes (feature, class) pairs directly, saving
+    both join shuffles.  The same kernel then runs on the pre-aggregated
+    rows.  Numbers are identical to the join formulation."""
     base = (
         emb.select(
             "label",
@@ -242,8 +336,8 @@ def uniform_class_weights(
             "feature",
             "value",
             "class",
-            F.when(F.col("class") == F.col("label"), 1).otherwise(-1).alias("y"),
-            F.lit(1.0 / (m * num_classes)).alias("weight"),
+            _label_sign(F.col("class")).alias("y"),
+            _class_weight(F.col("y"), None, 0.0, m, num_classes).alias("weight"),
         )
     )
     grouped = _side_masses(base, ["feature", "value", "class"])
@@ -294,56 +388,64 @@ def best_stump_row(zs: DataFrame) -> DataFrame:
     return zs.orderBy(zq, "feature", "threshold").limit(1)
 
 
-def fit_stump(
-    weighted: DataFrame, feats: DataFrame, m: int, num_classes: int, t: int = 0
+def _best_cut(
+    rows: DataFrame, m: int, num_classes: int, t: int, sampled: bool = False
 ) -> Stump:
-    """A3-A6 (reference: DecisionStumpAlgorithm.run [R]): find the best cut
-    and its confidence-rated votes.
+    """A3-A6 over ``rows``: one row per (example, feature) with columns
+    feature, value, and ``y_l`` / ``weight_l`` for every class l (y = 0
+    puts no mass on either side).
 
-    Shape per round — one chain, one 1-row driver action:
+    Shape — one chain, one 1-row driver action:
 
-      1. ``feats ⨝ weighted`` on id (m·d·K rows);
-      2. ``groupBy(feature, value)`` with the K classes folded into 2K
+      1. ``groupBy(feature, value)`` with the K classes folded into 2K
          conditional sums ``sp_l`` / ``sm_l`` — distinct values × d rows;
-      3. :func:`_cut_masses` with one prefix-sum window per feature, ordered
+      2. :func:`_cut_masses` with one prefix-sum window per feature, ordered
          by value, giving every class's W_+ / W_- at each cut (window
          parallelism d);
-      4. z = 2 Σ_l sqrt(W_+^l W_-^l), summed in class order, and the K
+      3. z = 2 Σ_l sqrt(W_+^l W_-^l), summed in class order, and the K
          eps-smoothed votes, both row-wise;
-      5. one global ``min(struct(floor(z·1e9 + 0.5), feature, threshold,
-         z, votes))`` — exactly :func:`best_stump_row`'s key and tiebreak,
-         with no sort, no limit and no join back for the votes.
+      4. one global ``min(struct(floor(z·1e9 + 0.5), feature, threshold,
+         z, votes, W_+, W_-))`` — exactly :func:`best_stump_row`'s key and
+         tiebreak, with no sort, no limit and no join back for the votes.
+         The cut's per-class W_± give the exact normalizer on the driver.
 
-    The cut and votes equal the relational pieces (:func:`stump_class_weights`
-    → :func:`stump_z` → :func:`best_stump_row`, the same kernel per (feature,
-    class)) up to summation order: z sums classes in class order, and
-    repeated values' weights may add up in another order, so only the last
-    bits can differ.  A feature with ~m distinct values puts all of them in
-    one window partition; at that skew
-    :func:`stump_class_weights_salted` is the way out.
+    With ``sampled``, the boolean column ``kept`` marks the rows the search
+    sees: the same aggregate also sums the kept rows alone (4K columns), z
+    and the votes come from those, the normalizer from all rows, and a
+    candidate cut is a value at least one kept row holds.
 
-    Raises ValueError when the search frame has no candidate cut (a
-    ``sample_pred`` that keeps no rows, a feature filter that keeps no
-    features)."""
+    Raises ValueError when there is no candidate cut."""
     eps = 1.0 / (2.0 * m * num_classes)
-    classes = range(num_classes)
+    full = [f"_{l}" for l in range(num_classes)]
+    suffixes = full + [f"{s}_k" for s in full] if sampled else full
 
     def z_and_votes(w_plus: list[Column], w_minus: list[Column]) -> list[Column]:
-        z_sum = F.sqrt(w_plus[0] * w_minus[0])
-        for wp, wm in zip(w_plus[1:], w_minus[1:]):
+        # the searched masses come last: the kept rows' when sampled
+        wp_s, wm_s = w_plus[-num_classes:], w_minus[-num_classes:]
+        z_sum = F.sqrt(wp_s[0] * wm_s[0])
+        for wp, wm in zip(wp_s[1:], wm_s[1:]):
             z_sum = z_sum + F.sqrt(wp * wm)
         votes = [
             0.5 * F.log((wp + F.lit(eps)) / (wm + F.lit(eps)))
-            for wp, wm in zip(w_plus, w_minus)
+            for wp, wm in zip(wp_s, wm_s)
         ]
-        return [(2.0 * z_sum).alias("z"), F.array(*votes).alias("votes")]
+        return [
+            (2.0 * z_sum).alias("z"),
+            F.array(*votes).alias("votes"),
+            F.array(*w_plus[:num_classes]).alias("w_plus"),
+            F.array(*w_minus[:num_classes]).alias("w_minus"),
+        ]
 
-    grouped = _side_masses(feats.join(weighted, "id"), ["feature", "value"], classes)
+    grouped = _side_masses(rows, ["feature", "value"], full, kept=sampled)
     scored = _cut_masses(
-        grouped, ["feature"], [f"_{l}" for l in classes], emit=z_and_votes
+        grouped, ["feature"], suffixes, emit=z_and_votes,
+        carry=["n_kept"] if sampled else [],
     )
+    if sampled:
+        scored = scored.filter(F.col("n_kept") > 0)
     key = F.struct(
-        F.floor(F.col("z") * 1e9 + 0.5).alias("zq"), "feature", "threshold", "z", "votes"
+        F.floor(F.col("z") * 1e9 + 0.5).alias("zq"),
+        "feature", "threshold", "z", "votes", "w_plus", "w_minus",
     )
     # bounded: 1 row — the global min over every candidate cut
     best = scored.agg(F.min(key).alias("best")).collect()[0]["best"]
@@ -352,13 +454,53 @@ def fit_stump(
             f"fit_stump round {t}: no candidate cut — the search frame is empty "
             "(a sample_pred or feature filter kept no rows)"
         )
+    votes = list(best["votes"])
+    norm = math.fsum(
+        wp * math.exp(-v) + wm * math.exp(v)
+        for wp, wm, v in zip(best["w_plus"], best["w_minus"], votes)
+    )
     return Stump(
         t=t,
         feature=int(best["feature"]),
         threshold=float(best["threshold"]),
         z=float(best["z"]),
-        votes=list(best["votes"]),
+        votes=votes,
+        norm=norm,
     )
+
+
+def fit_stump(
+    weighted: DataFrame, feats: DataFrame, m: int, num_classes: int, t: int = 0
+) -> Stump:
+    """A3-A6 (reference: DecisionStumpAlgorithm.run [R]): find the best cut,
+    its confidence-rated votes and its normalizer Z_t, from a long weighted
+    frame (id, class, y, weight) and exploded features (id, feature, value).
+
+    ``feats ⨝ weighted`` on id (m·d·K rows), each row's mass in its class's
+    column, then the search :func:`train` runs (:func:`_best_cut`).  The
+    cut and votes equal the relational pieces (:func:`stump_class_weights`
+    → :func:`stump_z` → :func:`best_stump_row`, the same kernel per
+    (feature, class)) up to summation order: z sums classes in class
+    order, and repeated values' weights may add up in another order, so
+    only the last bits can differ.  ``norm`` covers the rows searched, so
+    a caller that filters ``weighted`` gets the normalizer of the sample.
+    A feature with ~m distinct values puts all of them in one window
+    partition; at that skew :func:`stump_class_weights_salted` is the way
+    out.
+
+    Raises ValueError when the search frame has no candidate cut (a
+    filter that keeps no rows or no features)."""
+    classes = range(num_classes)
+    rows = feats.join(weighted, "id").select(
+        "feature",
+        "value",
+        *[
+            F.when(F.col("class") == l, F.col("y")).otherwise(0).alias(f"y_{l}")
+            for l in classes
+        ],
+        *[F.col("weight").alias(f"weight_{l}") for l in classes],
+    )
+    return _best_cut(rows, m, num_classes, t)
 
 
 def stumps_to_df(spark: SparkSession, stumps: list[Stump]) -> DataFrame:
@@ -386,31 +528,20 @@ def stumps_to_df(spark: SparkSession, stumps: list[Stump]) -> DataFrame:
 def update_weights(
     weighted: DataFrame, feats: DataFrame, stump: Stump, spark: SparkSession
 ) -> DataFrame:
-    """A8: w' = w exp(-y v_l phi(x)) / Z_norm, Z_norm a global scalar agg
-    (the reference's per-round action boundary [R] AdaBoostMHAlgorithm.run)."""
+    """A8 as one step of the iterated path: w' = w exp(-y v_l phi(x) - ln Z_t),
+    Z_t = ``stump.norm`` (found by :func:`fit_stump`), row-wise with no
+    aggregate.  :func:`train` does not call it: its weights are the same
+    factors in closed form.  It stays public for ``q_a8_weight_update`` and
+    the benchmark's traced copy of ``train`` (perfbench/workloads.py), which
+    ROADMAP.md's open item 1 deletes.  With a single earlier stump it
+    computes the same floats as :func:`train`'s round-2 weights."""
     phi = feats.filter(F.col("feature") == stump.feature).select(
-        "id",
-        F.when(F.col("value") > stump.threshold, 1.0).otherwise(-1.0).alias("phi"),
+        "id", _phi(F.col("value"), stump.threshold).alias("phi")
     )
-    votes_arr = F.array(*[F.lit(v) for v in stump.votes])
-    unnorm = (
-        weighted.join(phi, "id")
-        .withColumn(
-            "w_raw",
-            F.col("weight")
-            * F.exp(
-                -F.col("y")
-                * F.element_at(votes_arr, F.col("class") + 1)
-                * F.col("phi")
-            ),
-        )
-    )
-    # Z_norm stays IN the plan as a broadcast scalar (no driver action):
-    # the reference pulls it to the driver per round [R]; we let the
-    # following eager localCheckpoint materialize everything in one job
-    z_norm = unnorm.agg(F.sum("w_raw").alias("z_norm"))
-    return unnorm.crossJoin(F.broadcast(z_norm)).select(
-        "id", "class", "y", (F.col("w_raw") / F.col("z_norm")).alias("weight")
+    h = _vote(stump, F.col("class")) * F.col("phi")
+    factor = _log_factor(F.col("y"), h, math.log(stump.norm))
+    return weighted.join(phi, "id").select(
+        "id", "class", "y", (F.col("weight") * F.exp(factor)).alias("weight")
     )
 
 
@@ -439,63 +570,66 @@ def train(
 ) -> list[Stump]:
     """A10 (reference: AdaBoostMHAlgorithm.run [R]): the boosting loop.
 
-    Driver-orchestrated like the reference, but all state lives in
-    DataFrames. Shape per round: one :func:`fit_stump` chain ending in a
-    1-row collect, then :func:`update_weights` + an eager localCheckpoint
-    that truncates both RDD lineage and the Catalyst plan (SURVEY §4.2 item
-    1 — the one genuinely non-free part of DataFrame-native boosting). The
-    final round skips the reweight: no later search reads it, so T rounds
-    cost T searches and T-1 reweights. A12: optional instance/feature
-    subsampling before each stump search.  ``label_set_col`` names an ARRAY<INT>
-    multi-label column (BoosTexter label sets); None = single-label
-    ``label``.
+    Driver-orchestrated like the reference, with no weight state: round t's
+    weights D_t(i, l) are a closed-form expression of the literal stumps
+    found so far (:func:`_class_weight`), and each stump carries its exact
+    normalizer Z_t.  Shape per round — one chain over the persisted
+    examples ending in a 1-row collect:
 
-    Instance sampling is one pushed-down filter: ``sample_pred``, a callable
-    ``t -> boolean Column over 'id'``, filters the weighted frame before
-    round t's stump search (VERDICT r10 item 2: pure arithmetic that SQL
-    repeats makes sampled training oracle-checkable).  ``sample_fraction``
-    builds it as :func:`_hash_sample` of (id, ``seed`` + t); ``sample_pred``
-    wins if both are set.
+      1. the K weights per row (m·K exp), from H_{t-1}, which grows by one
+         stump per round (:func:`_add_stump`);
+      2. explode (feature, value);
+      3. the search of :func:`fit_stump` (:func:`_best_cut`):
+         ``groupBy(feature, value)``, the cut-mass window, one ``min(struct)``.
+
+    No weight frame, join, reweight or localCheckpoint sits between rounds;
+    only the examples are persisted.  Compared with the iterated
+    :func:`fit_stump` → :func:`update_weights` chain, round 2's weights are
+    the same floats; later rounds sum log-factors where the chain
+    multiplies factors, so weights differ in the last bits.  A12: optional
+    instance/feature subsampling of each stump search.  ``label_set_col``
+    names an ARRAY<INT> multi-label column (BoosTexter label sets); None =
+    single-label ``label``.
+
+    Instance sampling is one mask inside the search's aggregate:
+    ``sample_pred``, a callable ``t -> boolean Column over 'id'``, picks
+    the rows round t's stump search sees (VERDICT r10 item 2: pure
+    arithmetic that SQL repeats makes sampled training oracle-checkable),
+    while Z_t covers every row.  ``sample_fraction`` builds it as
+    :func:`_hash_sample` of (id, ``seed`` + t); ``sample_pred`` wins if
+    both are set.
     """
-    if label_set_col is not None:
-        emb = emb.select(
-            "vec_id", "embedding", F.col(label_set_col).alias("labels")
-        ).persist()
-        mlp = mlp_long_multi(emb, num_classes)
-    else:
-        emb = emb.select("vec_id", "embedding", "label").persist()
-        mlp = mlp_long(emb, num_classes)
+    label_set = label_set_col is not None
+    label = F.col(label_set_col).alias("labels") if label_set else F.col("label")
+    emb = emb.select(F.col("vec_id").alias("id"), "embedding", label).persist()
     m = emb.count()
-    feats = explode_features(emb).persist()
-    weighted = init_weights(mlp, m, num_classes)
-    weighted = weighted.localCheckpoint(eager=True)
-
     if sample_pred is None and sample_fraction is not None:
         sample_pred = _hash_sample(sample_fraction, seed)
-    stumps: list[Stump] = []
     # loop-invariant: feature count never changes between rounds, so the
     # one action that computes it runs once, not once per round
     n_feats = (
-        feats.agg(F.max("feature")).collect()[0][0]  # bounded: 1-row max agg
+        emb.agg(F.max(F.size("embedding"))).collect()[0][0]  # bounded: 1-row max agg
         if feature_fraction is not None
         else None
     )
+    sampled = sample_pred is not None
+    carry = [f"{c}_{l}" for l in range(num_classes) for c in ("y", "weight")]
+    carry += ["kept"] if sampled else []
+    stumps: list[Stump] = []
+    margins, log_norm = None, 0.0  # H_{t-1} and sum_{s<t} ln Z_s
     for t in range(num_rounds):
-        search_w, search_f = weighted, feats
-        if sample_pred is not None:
-            search_w = weighted.filter(sample_pred(t))
+        rows = _weight_rows(emb, margins, log_norm, m, num_classes, label_set)
+        if sampled:
+            rows = rows.withColumn("kept", sample_pred(t))
+        rows = _explode(rows, *carry)
         if feature_fraction is not None:
             keep = max(1, int(n_feats * feature_fraction))
             # deterministic per-round rotation of the feature subset
-            search_f = feats.filter(
-                ((F.col("feature") + t) % n_feats) < keep
-            )
-        stump = fit_stump(search_w, search_f, m, num_classes, t)
+            rows = rows.filter(((F.col("feature") + t) % n_feats) < keep)
+        stump = _best_cut(rows, m, num_classes, t, sampled)
         stumps.append(stump)
-        if t + 1 < num_rounds:  # no later search reads the last reweight
-            weighted = update_weights(weighted, feats, stump, spark)
-            weighted = weighted.localCheckpoint(eager=True)
-    feats.unpersist()
+        margins = _add_stump(margins, stump)
+        log_norm += math.log(stump.norm)
     emb.unpersist()
     return stumps
 

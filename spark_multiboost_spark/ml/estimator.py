@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark import keyword_only
 from pyspark.ml import Estimator, Model
 from pyspark.ml.param import Param, Params, TypeConverters
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from . import boosting
@@ -103,6 +103,10 @@ class AdaBoostMHClassifier(Estimator, _ABParams):
         model = AdaBoostMHModel(
             stumps_df=boosting.stumps_to_df(spark, stumps),
             num_classes=self.getOrDefault(self.numClasses),
+            summary=[
+                Row(t=s.t, feature=s.feature, threshold=s.threshold, z=s.z, norm=s.norm)
+                for s in stumps
+            ],
         )
         model._resetUid(self.uid)
         return self._copyValues(model)
@@ -110,12 +114,23 @@ class AdaBoostMHClassifier(Estimator, _ABParams):
 
 class AdaBoostMHModel(Model, _ABParams):
     """Fitted strong hypothesis; `transform` appends per-class scores and the
-    predicted label set (classes with positive margin)."""
+    predicted label set (classes with positive margin).
 
-    def __init__(self, stumps_df: DataFrame | None = None, num_classes: int = 10):
+    ``summary`` is the training record, one ``Row(t, feature, threshold, z,
+    norm)`` per round, kept on the driver (no Spark job): the product of
+    the ``norm`` column bounds the training Hamming loss (Schapire & Singer
+    1999).  A model loaded from a table has none."""
+
+    def __init__(
+        self,
+        stumps_df: DataFrame | None = None,
+        num_classes: int = 10,
+        summary: list[Row] | None = None,
+    ):
         super().__init__()
         self.stumps_df = stumps_df
         self._num_classes = num_classes
+        self.summary = summary
 
     def _transform(self, dataset: DataFrame) -> DataFrame:
         emb = dataset.select(

@@ -10,6 +10,7 @@ SURVEY §2.
 from __future__ import annotations
 
 import os
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -363,11 +364,17 @@ FROM upd, z
 )
 def weight_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8: one reweighting round against the fixed stump, with global Z
-    normalization (weight_rel = weight * mK for hash discrimination)."""
+    normalization (weight_rel = weight * mK for hash discrimination).  The
+    hand-built stump has no normalizer, so Z is one 1-row aggregate of the
+    unnormalized update (a stump with Z = 1)."""
     emb = _emb(spark, sf_dir)
     weighted, m = _weighted_uniform(emb)
     feats = boosting.explode_features(emb)
-    out = boosting.update_weights(weighted, feats, _STUMPS_FIXED[0], emb.sparkSession)
+    stump = _STUMPS_FIXED[0]
+    raw = boosting.update_weights(weighted, feats, replace(stump, norm=1.0), spark)
+    # bounded: 1 row — the global sum Z
+    norm = raw.agg(F.sum("weight")).collect()[0][0]
+    out = boosting.update_weights(weighted, feats, replace(stump, norm=norm), spark)
     return out.select(
         "id",
         "class",

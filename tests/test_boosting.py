@@ -137,8 +137,9 @@ def test_fit_stump_job_count(stump_unit, spark):
 )
 def test_fit_job_count(spark, sampling):
     """Regression guard, counted by Spark itself: one AdaBoostMHClassifier
-    fit at T=2 launches 19 Spark jobs, and ``sampleFraction``, a filter
-    inside each stump search, adds none."""
+    fit at T=2 launches 11 Spark jobs (19 while train carried a weight
+    frame), ``sampleFraction``, a mask inside each stump search's
+    aggregate, adds none, and neither does the model's summary."""
     from spark_multiboost_spark.ml.estimator import AdaBoostMHClassifier
 
     rows = [
@@ -155,27 +156,151 @@ def test_fit_job_count(spark, sampling):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert n_jobs == 19, f"fit launched {n_jobs} Spark jobs"
+    assert n_jobs == 11, f"fit launched {n_jobs} Spark jobs"
 
 
-def test_train_skips_final_reweight(spark, monkeypatch):
-    """No search reads the weights after the last round, so train(T)
-    reweights exactly T-1 times."""
-    calls = []
-    real = boosting.update_weights
-
-    def counting(*args, **kwargs):
-        calls.append(1)
-        return real(*args, **kwargs)
-
-    monkeypatch.setattr(boosting, "update_weights", counting)
+def test_train_keeps_no_weight_state(spark, monkeypatch):
+    """The weights are a closed-form expression of the stumps found so far:
+    train never reweights a frame, never checkpoints one, and persists only
+    its examples."""
     rows = [(i, [(i % 9) / 9.0, float(i % 2)], i % 3) for i in range(30)]
     emb = spark.createDataFrame(
         rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>, label INT"
     )
-    stumps = boosting.train(spark, emb, num_rounds=3, num_classes=3)
+    calls = {"update_weights": 0, "localCheckpoint": 0, "persist": 0}
+
+    def counting(name, real):
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return real(*args, **kwargs)
+
+        return wrapper
+
+    monkeypatch.setattr(
+        boosting, "update_weights", counting("update_weights", boosting.update_weights)
+    )
+    frame = type(emb)  # the concrete DataFrame class of this session
+    for name in ("localCheckpoint", "persist"):
+        monkeypatch.setattr(frame, name, counting(name, getattr(frame, name)))
+    stumps = boosting.train(
+        spark, emb, num_rounds=3, num_classes=3, sample_fraction=0.5
+    )
     assert len(stumps) == 3
-    assert len(calls) == 2
+    assert calls == {"update_weights": 0, "localCheckpoint": 0, "persist": 1}
+
+
+def _iterated(emb, rounds, k, multi=False):
+    """The public iterated path: init_weights -> fit_stump -> update_weights
+    per round, carrying the long weight frame."""
+    spark = emb.sparkSession
+    m = emb.count()
+    mlp = (boosting.mlp_long_multi if multi else boosting.mlp_long)(emb, k)
+    weighted = boosting.init_weights(mlp, m, k).localCheckpoint(eager=True)
+    feats = boosting.explode_features(emb).localCheckpoint(eager=True)
+    stumps = []
+    for t in range(rounds):
+        stumps.append(boosting.fit_stump(weighted, feats, m, k, t))
+        weighted = boosting.update_weights(weighted, feats, stumps[-1], spark)
+        weighted = weighted.localCheckpoint(eager=True)
+    return stumps
+
+
+def _distinct_frame(spark, m=40, d=3, k=4, seed=5):
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    x = rng.standard_normal((m, d))
+    label = (x[:, 0] > 0).astype(int) + 2 * (rng.random(m) < 0.3)
+    rows = [(i, [float(v) for v in x[i]], int(label[i])) for i in range(m)]
+    return spark.createDataFrame(
+        rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>, label INT"
+    )
+
+
+def test_closed_form_t2_bit_equal_to_iterated(spark):
+    """On distinct values every group sum has one addend, and the round-2
+    weights are w·exp(-y v phi - ln Z) on both paths: train's stumps equal
+    the iterated path's bit for bit."""
+    emb = _distinct_frame(spark)
+    want = _iterated(emb, 2, 4)
+    got = boosting.train(spark, emb, num_rounds=2, num_classes=4)
+    assert got == want
+
+
+@pytest.mark.parametrize("multi", [False, True], ids=["single", "multi"])
+def test_closed_form_t5_matches_iterated(spark, multi):
+    """Five rounds on repeated values: later rounds sum log-factors where
+    the iterated path multiplies factors, so only the last bits move."""
+    k, m = 3, 45
+    rows = [
+        (i, [float(i % 5), ((i * 7) % 4) / 4.0],
+         [i % 3, (i // 3) % 3] if multi else (i * 2) % 3)
+        for i in range(m)
+    ]
+    label = "labels ARRAY<INT>" if multi else "label INT"
+    emb = spark.createDataFrame(
+        rows, f"vec_id BIGINT, embedding ARRAY<DOUBLE>, {label}"
+    )
+    want = _iterated(emb, 5, k, multi)
+    got = boosting.train(
+        spark, emb, num_rounds=5, num_classes=k,
+        label_set_col="labels" if multi else None,
+    )
+    cuts = [(s.feature, s.threshold) for s in got]
+    assert cuts == [(s.feature, s.threshold) for s in want]
+    for a, b in zip(got, want):
+        assert max(abs(u - v) for u, v in zip(a.votes, b.votes)) < 1e-12, (a, b)
+        assert abs(a.z - b.z) < 1e-12 and abs(a.norm - b.norm) < 1e-12, (a, b)
+
+
+def test_norm_is_the_in_plan_normalizer(spark):
+    """Stump.norm, built on the driver from the cut's W±, equals the sum
+    sum_il w·exp(-y v phi) computed over the weighted frame, every round."""
+    emb = _distinct_frame(spark, m=30, d=2, k=3, seed=8)
+    stumps = _iterated(emb, 3, 3)
+    m = emb.count()
+    weighted = boosting.init_weights(boosting.mlp_long(emb, 3), m, 3)
+    feats = boosting.explode_features(emb)
+    for s in stumps:
+        phi = feats.filter(F.col("feature") == s.feature).select(
+            "id", F.when(F.col("value") > s.threshold, 1.0).otherwise(-1.0).alias("phi")
+        )
+        vote = F.element_at(F.array(*[F.lit(v) for v in s.votes]), F.col("class") + 1)
+        raw = F.col("weight") * F.exp(-F.col("y") * vote * F.col("phi"))
+        in_plan = weighted.join(phi, "id").agg(F.sum(raw)).collect()[0][0]
+        assert abs(s.norm - in_plan) < 1e-12, (s.t, s.norm, in_plan)
+        weighted = boosting.update_weights(weighted, feats, s, spark)
+
+
+def test_closed_form_weights_finite_past_exp_overflow(spark):
+    """Votes of ±400 on two stumps push |H| to 800, past exp's 709 limit:
+    the log-space weights stay finite and sum to 1."""
+    import numpy as np
+
+    k = 2
+    rows = [(i, [float(i % 4), float(i % 3)], i % 2) for i in range(12)]
+    emb = spark.createDataFrame(rows, "id BIGINT, embedding ARRAY<DOUBLE>, label INT")
+    x = np.array([r[1] for r in rows])
+    y = np.where(np.arange(k)[None, :] == np.array([r[2] for r in rows])[:, None], 1, -1)
+    cuts = [(1, 1.0, [400.0, -400.0]), (2, 0.0, [-400.0, 400.0])]
+    stumps, w, h = [], np.full(y.shape, 1.0 / y.size), np.zeros(y.shape)
+    for t, (f, theta, votes) in enumerate(cuts):
+        phi = np.where(x[:, f - 1] > theta, 1.0, -1.0)
+        step = np.array(votes)[None, :] * phi[:, None]
+        w, h = w * np.exp(-y * step), h + step
+        stumps.append(boosting.Stump(t, f, theta, 0.0, votes, norm=float(w.sum())))
+        w = w / w.sum()
+    assert np.abs(h).max() > 709, "fixture must overflow a plain exp(-yH)"
+    margins = None
+    for s in stumps:
+        margins = boosting._add_stump(margins, s)
+    log_norm = sum(math.log(s.norm) for s in stumps)
+    got = boosting._weight_rows(
+        emb, margins, log_norm, len(rows), k, label_set=False
+    ).select(*[f"weight_{l}" for l in range(k)]).collect()
+    ws = np.array([list(r) for r in got])
+    assert np.isfinite(ws).all()
+    assert abs(ws.sum() - 1.0) < 1e-9
 
 
 def test_empty_search_frame_names_the_round(stump_unit, spark):
@@ -213,6 +338,33 @@ def test_training_learns_separable_data(spark):
     mlp = boosting.mlp_long(emb, k)
     loss = boosting.hamming_loss(scored, mlp).collect()[0]["hamming_loss"]
     assert loss < 1.0 / k / 2  # far below the all-negative baseline (1/3)
+
+
+def test_summary_bounds_training_loss(spark):
+    """The fitted model's per-round summary carries each round's normalizer,
+    and the training Hamming loss is at most prod_t norm_t (Schapire &
+    Singer 1999), on the separable fixture above."""
+    from spark_multiboost_spark.ml.estimator import AdaBoostMHClassifier
+
+    k = 3
+    rows = [
+        (i, [(i % 9) / 9.0, float((i * 7) % 5) / 5.0], int((i % 9) / 9.0 * 3))
+        for i in range(90)
+    ]
+    emb = spark.createDataFrame(
+        rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>, label INT"
+    )
+    model = AdaBoostMHClassifier(numRounds=6, numClasses=k).fit(emb)
+    summary = model.summary
+    assert [r.t for r in summary] == list(range(6))
+    assert all(0 < r.norm <= 1 + 1e-12 for r in summary), summary
+    scored = (
+        model.transform(emb).select("label", "predicted_labels").collect()
+    )
+    wrong = sum(
+        (l == r.label) != (l in r.predicted_labels) for r in scored for l in range(k)
+    )
+    assert wrong / (len(rows) * k) <= math.prod(r.norm for r in summary)
 
 
 def test_training_on_fixture_embeddings(spark, sf_dir):
