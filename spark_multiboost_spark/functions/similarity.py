@@ -3455,13 +3455,18 @@ def _mmr_oracle() -> str:
     relevance; round r >= 2 scores every unselected candidate as
     LAM*rel - (1-LAM)*MAX(sim to selected) and picks the per-qid argmax
     (score DESC, cid ASC).  All doubles come from list_cosine_similarity
-    and one multiply/subtract — bit-identical to the Spark side."""
+    and one multiply/subtract — bit-identical to the Spark side.
+
+    Every CTE is ``MATERIALIZED``: msel{r} reads msel{r-1} twice, so an
+    inlined chain re-plans cand/sims (the e x e cosine join) a number of
+    times exponential in K, which ran DuckDB past 6 GB at sf0.001.
+    Materializing computes each CTE once; the result is unchanged."""
     lam, mu = "0.5e0", "0.5e0"
     parts = [
         f"""
-WITH e AS (
+WITH e AS MATERIALIZED (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding FROM embeddings
-), cand AS (
+), cand AS MATERIALIZED (
   SELECT qid, cid, rel FROM (
     SELECT a.vec_id AS qid, b.vec_id AS cid,
            list_cosine_similarity(a.embedding, b.embedding) AS rel,
@@ -3471,21 +3476,21 @@ WITH e AS (
     FROM e a JOIN e b ON a.vec_id <> b.vec_id
     WHERE a.vec_id < {N_QUERIES}
   ) WHERE rk <= {MMR_P}
-), sims AS (
+), sims AS MATERIALIZED (
   SELECT x.qid, x.cid AS ca, y.cid AS cb,
          list_cosine_similarity(ea.embedding, eb.embedding) AS sim
   FROM cand x JOIN cand y ON x.qid = y.qid AND x.cid <> y.cid
   JOIN e ea ON ea.vec_id = x.cid JOIN e eb ON eb.vec_id = y.cid
-), mpick1 AS (
+), mpick1 AS MATERIALIZED (
   SELECT qid, cid, rel, rel AS score FROM (
     SELECT qid, cid, rel,
            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY rel DESC, cid) AS rk
     FROM cand) WHERE rk = 1
-), msel1 AS (SELECT qid, cid FROM mpick1)"""
+), msel1 AS MATERIALIZED (SELECT qid, cid FROM mpick1)"""
     ]
     for r in range(2, K + 1):
         parts.append(
-            f""", mscore{r} AS (
+            f""", mscore{r} AS MATERIALIZED (
   SELECT c.qid, c.cid, c.rel,
          {lam} * c.rel - {mu} * MAX(s.sim) AS score
   FROM cand c
@@ -3494,12 +3499,12 @@ WITH e AS (
   LEFT JOIN msel{r-1} x ON x.qid = c.qid AND x.cid = c.cid
   WHERE x.cid IS NULL
   GROUP BY c.qid, c.cid, c.rel
-), mpick{r} AS (
+), mpick{r} AS MATERIALIZED (
   SELECT qid, cid, rel, score FROM (
     SELECT qid, cid, rel, score,
            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rk
     FROM mscore{r}) WHERE rk = 1
-), msel{r} AS (
+), msel{r} AS MATERIALIZED (
   SELECT qid, cid FROM msel{r-1} UNION ALL SELECT qid, cid FROM mpick{r}
 )"""
         )

@@ -23,8 +23,9 @@ mount was empty at survey time, SURVEY.md §0):
   checkpointed from round to round (the reference re-caches its weighted
   RDD per round).  The sampleRate of A12 is one hash predicate on
   (id, seed + t) per round.
-- AdaBoostMHModel.predict [R] -> :func:`score_model` (A9): broadcast stump
-  table join + hash agg.
+- AdaBoostMHModel.predict [R] -> :func:`score_model` (A9): the same sum
+  H(x) that :func:`train`'s weights read (:func:`_add_stump`), one row-wise
+  projection over the collected stump table — no join, shuffle or agg.
 
 Math (Schapire & Singer 1999, BoosTexter 2000):
   phi_{j,theta}(x) = +1 if x[j] > theta else -1
@@ -312,15 +313,13 @@ def stump_class_weights(weighted: DataFrame, feats: DataFrame) -> DataFrame:
     return _cut_masses(grouped, ["feature", "class"], [""])
 
 
-def uniform_class_weights(
+def _uniform_side_masses(
     emb: DataFrame, num_features: int, num_classes: int, m: int
 ) -> DataFrame:
-    """A3+A4 for ROUND ONE (uniform weights): the t = 0 case of the
-    closed-form weights (:func:`_class_weight` with no stumps), so the
-    feats-x-weights join of :func:`stump_class_weights` fuses away — one
-    pass over the source explodes (feature, class) pairs directly, saving
-    both join shuffles.  The same kernel then runs on the pre-aggregated
-    rows.  Numbers are identical to the join formulation."""
+    """:func:`_side_masses` by (feature, value, class) of ROUND ONE's uniform
+    weights (:func:`_class_weight` with no stumps) over the first
+    ``num_features`` features: one pass explodes (feature, class) pairs
+    from the source rows, with no feats-x-weights join."""
     base = (
         emb.select(
             "label",
@@ -340,7 +339,17 @@ def uniform_class_weights(
             _class_weight(F.col("y"), None, 0.0, m, num_classes).alias("weight"),
         )
     )
-    grouped = _side_masses(base, ["feature", "value", "class"])
+    return _side_masses(base, ["feature", "value", "class"])
+
+
+def uniform_class_weights(
+    emb: DataFrame, num_features: int, num_classes: int, m: int
+) -> DataFrame:
+    """A3+A4 for ROUND ONE: :func:`stump_class_weights` of the uniform
+    weights, with the feats-x-weights join and both its shuffles fused away
+    (:func:`_uniform_side_masses`).  Numbers are identical to the join
+    formulation."""
+    grouped = _uniform_side_masses(emb, num_features, num_classes, m)
     return _cut_masses(grouped, ["feature", "class"], [""])
 
 
@@ -598,7 +607,11 @@ def train(
     while Z_t covers every row.  ``sample_fraction`` builds it as
     :func:`_hash_sample` of (id, ``seed`` + t); ``sample_pred`` wins if
     both are set.
+
+    Raises ValueError, before any Spark job, when ``num_rounds`` < 1.
     """
+    if num_rounds < 1:
+        raise ValueError(f"train: num_rounds must be at least 1, got {num_rounds}")
     label_set = label_set_col is not None
     label = F.col(label_set_col).alias("labels") if label_set else F.col("label")
     emb = emb.select(F.col("vec_id").alias("id"), "embedding", label).persist()
@@ -634,33 +647,34 @@ def train(
     return stumps
 
 
+def _explode_margins(emb: DataFrame, margins: list[Column]) -> DataFrame:
+    """(id, class, score): the K ``margins`` of each ``emb`` row, one row per
+    class."""
+    return emb.select(
+        F.col("vec_id").alias("id"),
+        F.posexplode(F.array(*margins)).alias("class", "score"),
+    )
+
+
 def score_model(emb: DataFrame, stumps_df: DataFrame) -> DataFrame:
-    """A9 (reference: AdaBoostMHModel.predict [R]): H(x)[l] = sum_t h_t(x)[l]
-    via broadcast stump join + hash agg. Returns (id, class, score, pred)."""
-    stump_long = stumps_df.select(
-        "t", "feature", "threshold", F.posexplode("votes").alias("class", "v")
-    )
-    phi = emb.select(F.col("vec_id").alias("id"), "embedding").crossJoin(
-        F.broadcast(stumps_df.select("t", "feature", "threshold"))
-    ).select(
-        "id",
-        "t",
-        F.when(
-            F.element_at("embedding", F.col("feature")) > F.col("threshold"), 1.0
-        )
-        .otherwise(-1.0)
-        .alias("phi"),
-    )
-    return (
-        phi.join(F.broadcast(stump_long.select("t", "class", "v")), "t")
-        .groupBy("id", "class")
-        .agg(F.sum(F.col("v") * F.col("phi")).alias("score"))
-        .select(
-            "id",
-            "class",
-            "score",
-            F.when(F.col("score") > 0, 1).otherwise(-1).alias("pred"),
-        )
+    """A9 (reference: AdaBoostMHModel.predict [R]): H(x)[l] = sum_t h_t(x)[l],
+    the sum :func:`train` builds for its weights (:func:`_add_stump`, folded
+    in t order), as one row-wise projection of ``emb`` with no join, shuffle
+    or aggregate.  Returns (id, class, score, pred).
+
+    The stump table is collected to the driver: a :func:`stumps_to_df` table
+    is a local relation (no job), a parquet-read one costs a 1-task scan.
+
+    Raises ValueError when the stump table is empty."""
+    # bounded: one row per boosting round
+    rows = stumps_df.select("t", "feature", "threshold", "votes").collect()
+    if not rows:
+        raise ValueError("score_model: the stump table is empty (a model needs 1+ rounds)")
+    margins = None
+    for r in sorted(rows, key=lambda r: r.t):
+        margins = _add_stump(margins, Stump(r.t, r.feature, r.threshold, math.nan, r.votes))
+    return _explode_margins(emb, margins).select(
+        "*", F.when(F.col("score") > 0, 1).otherwise(-1).alias("pred")
     )
 
 

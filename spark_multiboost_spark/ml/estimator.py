@@ -140,12 +140,23 @@ class AdaBoostMHModel(Model, _ABParams):
             .alias("embedding"),
         )
         scored = boosting.score_model(emb, self.stumps_df)
+        # one (class, score) per class and row: a class that repeats within an
+        # id's list means the id names more than one input row
+        duplicate = F.raise_error(
+            F.concat(F.lit("transform: duplicate id "), F.col("id").cast("string"))
+        )
         wide = (
             scored.groupBy("id")
             .agg(
                 F.array_sort(
                     F.collect_list(F.struct("class", "score"))
                 ).alias("cs")
+            )
+            .select(
+                "id",
+                F.when(F.size(F.array_distinct("cs.class")) < F.size("cs"), duplicate)
+                .otherwise(F.col("cs"))
+                .alias("cs"),
             )
             .select(
                 F.col("id").alias(self.getOrDefault(self.idCol)),

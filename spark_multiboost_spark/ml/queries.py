@@ -167,16 +167,7 @@ def prefix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     weighted, _m = _weighted_uniform(emb)
     feats = boosting.explode_features(emb).filter(F.col("feature") == 1)
-    from pyspark.sql import Window
-
-    grouped = (
-        feats.join(weighted, "id")
-        .groupBy("value", "class")
-        .agg(
-            F.sum(F.when(F.col("y") == 1, F.col("weight")).otherwise(0.0)).alias("swp"),
-            F.sum(F.when(F.col("y") == -1, F.col("weight")).otherwise(0.0)).alias("swm"),
-        )
-    )
+    grouped = boosting._side_masses(feats.join(weighted, "id"), ["value", "class"])
     w_cum = (
         Window.partitionBy("class")
         .orderBy("value")
@@ -185,8 +176,8 @@ def prefix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return grouped.select(
         F.col("value").alias("threshold"),
         "class",
-        F.round(F.sum("swp").over(w_cum), 9).alias("p_plus"),
-        F.round(F.sum("swm").over(w_cum), 9).alias("p_minus"),
+        F.round(F.sum("sp").over(w_cum), 9).alias("p_plus"),
+        F.round(F.sum("sm").over(w_cum), 9).alias("p_minus"),
     )
 
 
@@ -324,25 +315,9 @@ FROM e CROSS JOIN (SELECT UNNEST(GENERATE_SERIES(0, {K - 1})) AS class) g
 )
 def stump_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7: h(x)[l] = v_l * phi(x) for the fixed stump (feature 3, theta 0)."""
-    emb = _emb(spark, sf_dir)
-    s = _STUMPS_FIXED[0]
-    votes = F.array(*[F.lit(v) for v in s.votes])
-    return (
-        emb.select(F.col("vec_id").alias("id"), "embedding")
-        .select(
-            "id",
-            F.explode(F.sequence(F.lit(0), F.lit(K - 1))).alias("class"),
-            F.when(F.element_at("embedding", s.feature) > s.threshold, 1.0)
-            .otherwise(-1.0)
-            .alias("phi"),
-        )
-        .select(
-            "id",
-            "class",
-            F.round(F.element_at(votes, F.col("class") + 1) * F.col("phi"), 6).alias(
-                "h"
-            ),
-        )
+    h = boosting._add_stump(None, _STUMPS_FIXED[0])
+    return boosting._explode_margins(_emb(spark, sf_dir), h).select(
+        "id", "class", F.round("score", 6).alias("h")
     )
 
 
@@ -403,7 +378,7 @@ GROUP BY id, g.class
 )
 def score_fixed_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9: strong-model scoring H(x)[l] = sum_t v_tl phi_t(x) with the fixed
-    3-stump table (broadcast join + hash agg)."""
+    3-stump table (boosting.score_model: one row-wise projection)."""
     emb = _emb(spark, sf_dir)
     sdf = boosting.stumps_to_df(emb.sparkSession, _STUMPS_FIXED)
     return boosting.score_model(emb, sdf).select(
@@ -546,9 +521,9 @@ def margin_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     mass = examples some label still misclassifies; the cum_frac curve is
     what the margin-theory bound is written over.
 
-    One broadcast of the 3-stump table, one hash-agg to scores, one to the
-    per-example min, one to buckets — no corpus-sized shuffle carries more
-    than (id, margin)."""
+    Scores are a row-wise projection (boosting.score_model); one hash-agg
+    to the per-example min, one to buckets — no corpus-sized shuffle
+    carries more than (id, margin)."""
     emb = _emb(spark, sf_dir)
     sdf = boosting.stumps_to_df(emb.sparkSession, _STUMPS_FIXED)
     scored = boosting.score_model(emb, sdf)
@@ -951,25 +926,7 @@ def abstain_stump_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle versus plain A5; both engines agree on inclusive range-frame
     boundaries (verified, see tests)."""
     emb = _emb(spark, sf_dir)
-    m = emb.count()
-    weight = 1.0 / (m * K)
-    base = (
-        emb.select(
-            F.col("vec_id").alias("id"),
-            "label",
-            F.posexplode(F.slice("embedding", 1, 4)).alias("f0", "value"),
-        )
-        .select("id", "label", (F.col("f0") + 1).alias("feature"), "value")
-        .crossJoin(spark.range(K).select(F.col("id").cast("int").alias("class")))
-    )
-    grouped = base.groupBy("feature", "value", "class").agg(
-        F.sum(
-            F.when(F.col("class") == F.col("label"), F.lit(weight)).otherwise(0.0)
-        ).alias("swp"),
-        F.sum(
-            F.when(F.col("class") != F.col("label"), F.lit(weight)).otherwise(0.0)
-        ).alias("swm"),
-    )
+    grouped = boosting._uniform_side_masses(emb, 4, K, emb.count())
     d = ABSTAIN_DELTA
     frame = "PARTITION BY feature, class ORDER BY value"
     cum = grouped.select(
@@ -978,24 +935,24 @@ def abstain_stump_z(spark: SparkSession, sf_dir: str) -> DataFrame:
         "class",
         F.coalesce(
             F.expr(
-                f"SUM(swp) OVER ({frame} RANGE BETWEEN UNBOUNDED PRECEDING AND {d} PRECEDING)"
+                f"SUM(sp) OVER ({frame} RANGE BETWEEN UNBOUNDED PRECEDING AND {d} PRECEDING)"
             ),
             F.lit(0.0),
         ).alias("lo_p"),
         F.coalesce(
             F.expr(
-                f"SUM(swm) OVER ({frame} RANGE BETWEEN UNBOUNDED PRECEDING AND {d} PRECEDING)"
+                f"SUM(sm) OVER ({frame} RANGE BETWEEN UNBOUNDED PRECEDING AND {d} PRECEDING)"
             ),
             F.lit(0.0),
         ).alias("lo_m"),
         F.expr(
-            f"SUM(swp) OVER ({frame} RANGE BETWEEN UNBOUNDED PRECEDING AND {d} FOLLOWING)"
+            f"SUM(sp) OVER ({frame} RANGE BETWEEN UNBOUNDED PRECEDING AND {d} FOLLOWING)"
         ).alias("le_hi_p"),
         F.expr(
-            f"SUM(swm) OVER ({frame} RANGE BETWEEN UNBOUNDED PRECEDING AND {d} FOLLOWING)"
+            f"SUM(sm) OVER ({frame} RANGE BETWEEN UNBOUNDED PRECEDING AND {d} FOLLOWING)"
         ).alias("le_hi_m"),
-        F.expr("SUM(swp) OVER (PARTITION BY feature, class)").alias("t_p"),
-        F.expr("SUM(swm) OVER (PARTITION BY feature, class)").alias("t_m"),
+        F.expr("SUM(sp) OVER (PARTITION BY feature, class)").alias("t_p"),
+        F.expr("SUM(sm) OVER (PARTITION BY feature, class)").alias("t_m"),
     )
     blocks = cum.select(
         "feature",
@@ -1073,8 +1030,8 @@ def calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     maximization), and this query quantifies exactly that — the standard
     post-hoc check before using H(x) as a probability.
 
-    Same one-broadcast/two-hash-agg shape as the other A11 metrics; the
-    bin means go through the decimal path so bucket stats are
+    Same shape as the other A11 metrics (row-wise scores, hash-aggs on
+    top); the bin means go through the decimal path so bucket stats are
     accumulation-order-independent."""
     emb = _emb(spark, sf_dir)
     sdf = boosting.stumps_to_df(emb.sparkSession, _STUMPS_FIXED)
@@ -1108,6 +1065,15 @@ def calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("frac_positive"),
         )
         .orderBy("bucket")
+    )
+
+
+def _label_sets(emb: DataFrame) -> DataFrame:
+    """The fixture's deterministic label SETS as an ARRAY<INT> ``labels``
+    column: every row's own label, and on even vec_ids also (label+3) mod K."""
+    second = F.when(F.col("vec_id") % 2 == 0, (F.col("label") + 3) % K)
+    return emb.select(
+        "vec_id", "embedding", F.array_compact(F.array("label", second)).alias("labels")
     )
 
 
@@ -1149,34 +1115,14 @@ def multilabel_weight_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     assumes singleton label sets.  labelset_size surfaces per example so
     the oracle hash proves the two-label rows exist.
 
-    Plan: the lift is a map-side explode over the broadcast class range;
-    one window partitioned by id for the set-size audit."""
-    emb = _emb(spark, sf_dir)
-    ls = emb.select(
-        "vec_id",
-        F.col("label").alias("l1"),
-        F.when(F.col("vec_id") % 2 == 0, (F.col("label") + 3) % K)
-        .otherwise(-1)
-        .alias("l2"),
-    )
-    mlp = ls.select(
-        F.col("vec_id").alias("id"),
-        F.explode(F.sequence(F.lit(0), F.lit(K - 1))).alias("class"),
-        "l1",
-        "l2",
-    ).select(
-        "id",
-        "class",
-        F.when(
-            (F.col("class") == F.col("l1")) | (F.col("class") == F.col("l2")), 1
-        )
-        .otherwise(-1)
-        .alias("y"),
-    )
-    m = emb.count()
+    Plan: the lift is boosting.mlp_long_multi's map-side explode of the
+    class range; one window partitioned by id for the set-size audit."""
+    emb = _label_sets(_emb(spark, sf_dir))
+    mlp = boosting.mlp_long_multi(emb, K)
     w = Window.partitionBy("id")
     return (
-        mlp.withColumn("weight", F.round(F.lit(1.0) / (m * K), 9))
+        boosting.init_weights(mlp, emb.count(), K)
+        .withColumn("weight", F.round("weight", 9))
         .withColumn(
             "labelset_size",
             F.sum(F.when(F.col("y") == 1, 1).otherwise(0)).over(w).cast("bigint"),
@@ -1244,29 +1190,8 @@ def multilabel_stump_z(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same plan shape as A5: one (feature,class)-partitioned prefix window
     over the pre-aggregated candidate weights."""
-    emb = _emb(spark, sf_dir)
-    ls = emb.select(
-        "vec_id",
-        F.col("label").alias("l1"),
-        F.when(F.col("vec_id") % 2 == 0, (F.col("label") + 3) % K)
-        .otherwise(-1)
-        .alias("l2"),
-    )
-    mlp = ls.select(
-        F.col("vec_id").alias("id"),
-        F.explode(F.sequence(F.lit(0), F.lit(K - 1))).alias("class"),
-        "l1",
-        "l2",
-    ).select(
-        "id",
-        "class",
-        F.when(
-            (F.col("class") == F.col("l1")) | (F.col("class") == F.col("l2")), 1
-        )
-        .otherwise(-1)
-        .alias("y"),
-    )
-    weighted = boosting.init_weights(mlp, emb.count(), K)
+    emb = _label_sets(_emb(spark, sf_dir))
+    weighted = boosting.init_weights(boosting.mlp_long_multi(emb, K), emb.count(), K)
     feats = boosting.explode_features(emb).filter(F.col("feature") <= 4)
     cw = boosting.stump_class_weights(weighted, feats)
     return boosting.stump_z(cw).select(
@@ -1621,7 +1546,7 @@ def estimator_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     against DuckDB, not just row-counted.
 
     Scale shape: identical to the training loop's (one grouped agg + one
-    bounded window per round, stump table broadcast for scoring); the
+    bounded window per round; scoring is one row-wise projection); the
     4-feature slice bounds the ORACLE's candidate grid, not the engine's."""
     from .estimator import AdaBoostMHClassifier
 
@@ -1689,7 +1614,7 @@ def estimator_multilabel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cross-engine choice on 1e-16 summation-order bits.
 
     Scale shape: identical to q_d7_estimator_scored (one grouped agg + one
-    bounded window per round; stump table broadcast for scoring); the
+    bounded window per round; scoring is one row-wise projection); the
     label-set lift only flips y signs in the long frame, adding no rows."""
     from .estimator import AdaBoostMHClassifier
 

@@ -312,6 +312,65 @@ def test_empty_search_frame_names_the_round(stump_unit, spark):
         )
 
 
+def test_train_rejects_zero_rounds(stump_unit, spark):
+    """A model with no stump would score nothing: train refuses it before
+    any Spark job, and so does the estimator."""
+    from spark_multiboost_spark.ml.estimator import AdaBoostMHClassifier
+
+    emb, _, _ = stump_unit
+    sc = spark.sparkContext
+    group = "test_train_rejects_zero_rounds"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="num_rounds"):
+            boosting.train(spark, emb, num_rounds=0, num_classes=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    with pytest.raises(ValueError, match="num_rounds"):
+        AdaBoostMHClassifier(numRounds=0, numClasses=2).fit(emb)
+
+
+def test_score_model_rejects_empty_stump_table(stump_unit, spark):
+    emb, _, _ = stump_unit
+    with pytest.raises(ValueError, match="stump table is empty"):
+        boosting.score_model(emb, boosting.stumps_to_df(spark, []))
+
+
+def test_transform_rejects_duplicate_id(stump_unit, spark):
+    """Two input rows with one id cannot be told apart by the id pivot:
+    transform fails and names the id instead of returning merged scores."""
+    from spark_multiboost_spark.ml.estimator import AdaBoostMHClassifier
+
+    emb, _, _ = stump_unit
+    model = AdaBoostMHClassifier(numRounds=1, numClasses=2).fit(emb)
+    assert model.transform(emb).count() == 6
+    dup = emb.unionByName(emb.filter(F.col("vec_id") == 4))
+    with pytest.raises(Exception, match="duplicate id 4"):
+        model.transform(dup).collect()
+
+
+def test_score_model_plan_is_one_projection(stump_unit, spark, tmp_path):
+    """Scoring a parquet-read frame is a scan and a projection: the
+    optimized and physical plans hold no join, aggregate or exchange."""
+    emb, _, _ = stump_unit
+    emb.write.parquet(str(tmp_path / "emb"))
+    stumps = [
+        boosting.Stump(t=0, feature=1, threshold=0.3, z=0.0, votes=[0.5, -0.5]),
+        boosting.Stump(t=1, feature=2, threshold=1.0, z=0.0, votes=[0.25, 0.25]),
+    ]
+    scored = boosting.score_model(
+        spark.read.parquet(str(tmp_path / "emb")), boosting.stumps_to_df(spark, stumps)
+    )
+    qe = scored._jdf.queryExecution()
+    optimized, physical = qe.optimizedPlan().toString(), qe.executedPlan().toString()
+    for node in ("Join", "Aggregate"):
+        assert node not in optimized, optimized
+    for node in ("Join", "Aggregate", "Exchange"):
+        assert node not in physical, physical
+    assert scored.count() == 6 * 2
+
+
 def test_weight_update_normalizes(stump_unit, spark):
     emb, weighted, feats = stump_unit
     stump = boosting.fit_stump(weighted, feats, m=6, num_classes=2)

@@ -8,7 +8,9 @@ correctness story leans on:
    arbitrary weighted frames (not just the fixtures), and both equal the
    cut masses of a numpy cumsum;
 3. the blocked-matmul scorer's strict left-to-right accumulation is
-   bit-identical to a scalar sequential loop (the DuckDB/Catalyst fold).
+   bit-identical to a scalar sequential loop (the DuckDB/Catalyst fold);
+4. the AdaBoost.MH scorer, ``score_model`` and the model's ``transform``,
+   equals the numpy strong hypothesis of the benchmark's reference.
 """
 
 from __future__ import annotations
@@ -152,6 +154,64 @@ def test_class_weights_match_numpy_cumsum(spark, k, rows, n_buckets):
                 got[key],
                 (wp, wm),
             )
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    k=st.integers(2, 5),
+    levels=st.lists(
+        st.lists(st.integers(0, 3), min_size=3, max_size=3), min_size=1, max_size=12
+    ),
+    stumps=st.lists(
+        st.tuples(
+            st.integers(1, 3),  # feature, repeats across stumps
+            st.integers(0, 11),  # the row whose value is the threshold
+            st.lists(st.integers(-16, 16), min_size=5, max_size=5),  # votes * 8
+        ),
+        min_size=1,
+        max_size=20,
+    ),
+)
+def test_scorer_matches_numpy(spark, k, levels, stumps):
+    """score_model and AdaBoostMHModel.transform against perfbench's numpy
+    H(x) = phi @ votes.  Thresholds are observed values, so x == theta
+    occurs and must score phi = -1.  Votes are multiples of 1/8, so every
+    sum is exact in any order and the signs of predicted_labels compare
+    exactly."""
+    from perfbench import reference
+    from spark_multiboost_spark.ml import boosting
+    from spark_multiboost_spark.ml.estimator import AdaBoostMHModel
+
+    x = 0.7 * (np.array(levels, dtype=float) - 1.5)
+    model = [
+        boosting.Stump(t, f, float(x[row % len(x), f - 1]), 0.0, [v / 8 for v in vs[:k]])
+        for t, (f, row, vs) in enumerate(stumps)
+    ]
+    want = reference.score(
+        x,
+        np.array([s.feature for s in model]),
+        np.array([s.threshold for s in model]),
+        np.array([s.votes for s in model]),
+    )
+    emb = spark.createDataFrame(
+        [(i, [float(v) for v in row]) for i, row in enumerate(x)],
+        "vec_id bigint, embedding array<double>",
+    )
+    sdf = boosting.stumps_to_df(spark, model)
+    got = np.zeros_like(want)
+    for r in boosting.score_model(emb, sdf).collect():
+        got[r["id"], r["class"]] = r["score"]
+        assert r["pred"] == (1 if want[r["id"], r["class"]] > 0 else -1)
+    assert np.abs(got - want).max() < 1e-12
+    rows = sorted(
+        AdaBoostMHModel(stumps_df=sdf, num_classes=k).transform(emb).collect(),
+        key=lambda r: r["vec_id"],
+    )
+    assert [r["vec_id"] for r in rows] == list(range(len(x)))
+    assert np.abs(np.array([r["scores"] for r in rows]) - want).max() < 1e-12
+    assert [list(r["predicted_labels"]) for r in rows] == [
+        list(np.flatnonzero(s > 0)) for s in want
+    ]
 
 
 @settings(max_examples=30, deadline=None)
