@@ -32,26 +32,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # taken under this exact 17-query protocol). New flagships go in SHOWCASE:
 # timed under the same protocol, reported separately, never summed into
 # "value" — growing coverage must not mechanically inflate the headline.
-HEADLINE = [
-    "q_b11_pricing_summary",
-    "q_b05_join_revenue_by_priority",
-    "q_b06_broadcast_join_brand_volume",
-    "q_b20_topk_per_group",
-    "q_b16_ranking",
-    "q_b31_cte_nation_revenue",
-    "q_b30_correlated_exists",
-    "q_c1_tumbling_window",
-    "q_c3_session_window",
-    "q_d3_topk_cosine",
-    "q_a5_stump_z",
-    "q_b35_pandas_udf_token_count",
-    # round-1 additions: TPC-H-shaped composites + pipeline showcases
-    "q_comp_forecast_revenue",
-    "q_comp_top_customers",
-    "q_ext_hypertable_rollup",
-    "q_comp_docpipe",
-    "q_d3_ivf_ann",
-]
+# The list itself is defined once, in perfbench/workloads.py, whose
+# query_mix workload runs the same 17 queries.
+sys.path.append(os.path.join(os.path.dirname(os.path.abspath(__file__)), "perfbench"))
+from workloads import HEADLINE  # noqa: E402
 
 # round-2+ flagships, timed but reported outside the comparable total
 SHOWCASE = [

@@ -40,7 +40,8 @@ def main() -> None:
 
     emb = load_tables(spark, sf_dir)["embeddings"]
     model = AdaBoostMHClassifier(numRounds=3, numClasses=10).fit(emb)
-    scored = boosting.score_model(emb, model.stumps_df)
+    # each row's K margins, one row per (id, class) for the loss
+    scored = boosting._explode_margins(boosting.score_model(emb, model.stumps_df))
     mlp = boosting.mlp_long(emb, 10)
     boosting.hamming_loss(scored, mlp).show()
     print("stump table (model-as-DataFrame):")

@@ -24,8 +24,9 @@ mount was empty at survey time, SURVEY.md §0):
   RDD per round).  The sampleRate of A12 is one hash predicate on
   (id, seed + t) per round.
 - AdaBoostMHModel.predict [R] -> :func:`score_model` (A9): the same sum
-  H(x) that :func:`train`'s weights read (:func:`_add_stump`), one row-wise
-  projection over the collected stump table — no join, shuffle or agg.
+  H(x) that :func:`train`'s weights read (:func:`_add_stump`), the K
+  margins of each input row as one array column — a row-wise projection
+  over the collected stump table, with no join, shuffle or agg.
 
 Math (Schapire & Singer 1999, BoosTexter 2000):
   phi_{j,theta}(x) = +1 if x[j] > theta else -1
@@ -517,14 +518,15 @@ def stumps_to_df(spark: SparkSession, stumps: list[Stump]) -> DataFrame:
 
     Built as a literal-expression plan (``session.local_df``, r14
     optimization round, guide §4.1/§6.3): the model is embedded in the
-    PLAN, so every broadcast build, parquet write, and reload of the stump
-    table is a 1-task JVM-only job with no Python-worker roundtrip — the
+    PLAN, so every broadcast build, parquet write, and collect of the stump
+    table is a JVM-only job with no Python-worker roundtrip — the
     old ``createDataFrame`` form's 32 parallelized slices each paid a
     pickle/worker exchange on EVERY materialization (A/B on the boosting
     family: q_a9_score_model CPU 15.1 → 1.2 s, q_a12 19.9 → 5.6 s,
-    q_d7_estimator_scored 15.2 → 7.0 s; identical row signatures).  Model
-    tables are ≤ num_rounds rows, so one partition is the correct layout
-    at any scale."""
+    q_d7_estimator_scored 15.2 → 7.0 s; identical row signatures).  It is
+    still a job, not a local relation: ``range(1)`` plus an explode, one
+    task per defaultParallelism slice, with the ≤ num_rounds rows all in
+    one of them."""
     from ..session import local_df
 
     return local_df(
@@ -647,23 +649,16 @@ def train(
     return stumps
 
 
-def _explode_margins(emb: DataFrame, margins: list[Column]) -> DataFrame:
-    """(id, class, score): the K ``margins`` of each ``emb`` row, one row per
-    class."""
-    return emb.select(
-        F.col("vec_id").alias("id"),
-        F.posexplode(F.array(*margins)).alias("class", "score"),
-    )
-
-
 def score_model(emb: DataFrame, stumps_df: DataFrame) -> DataFrame:
     """A9 (reference: AdaBoostMHModel.predict [R]): H(x)[l] = sum_t h_t(x)[l],
     the sum :func:`train` builds for its weights (:func:`_add_stump`, folded
     in t order), as one row-wise projection of ``emb`` with no join, shuffle
-    or aggregate.  Returns (id, class, score, pred).
+    or aggregate.  Returns every ``emb`` column plus ``scores``, the K
+    margins in class order.
 
-    The stump table is collected to the driver: a :func:`stumps_to_df` table
-    is a local relation (no job), a parquet-read one costs a 1-task scan.
+    The stump table is collected to the driver, which costs one job: a
+    :func:`stumps_to_df` table is ``range(1)`` plus an explode
+    (defaultParallelism tasks), a parquet-read one a scan.
 
     Raises ValueError when the stump table is empty."""
     # bounded: one row per boosting round
@@ -673,9 +668,17 @@ def score_model(emb: DataFrame, stumps_df: DataFrame) -> DataFrame:
     margins = None
     for r in sorted(rows, key=lambda r: r.t):
         margins = _add_stump(margins, Stump(r.t, r.feature, r.threshold, math.nan, r.votes))
-    return _explode_margins(emb, margins).select(
-        "*", F.when(F.col("score") > 0, 1).otherwise(-1).alias("pred")
-    )
+    return emb.select("*", F.array(*margins).alias("scores"))
+
+
+def _explode_margins(scored: DataFrame) -> DataFrame:
+    """(id, class, score, pred): :func:`score_model`'s ``scores`` one row per
+    class, with pred = sign(score) in {+1, -1} — the long form the A-queries
+    and their SQL oracles read."""
+    return scored.select(
+        F.col("vec_id").alias("id"),
+        F.posexplode("scores").alias("class", "score"),
+    ).select("*", F.when(F.col("score") > 0, 1).otherwise(-1).alias("pred"))
 
 
 def hamming_loss(scored: DataFrame, mlp: DataFrame) -> DataFrame:

@@ -5,7 +5,9 @@ The reference exposes AdaBoostMHAlgorithm(...).run(rdd) returning an
 AdaBoostMHModel [R] .../stronglearners/AdaBoostMH.scala (reconstructed,
 mount empty); here the same capability is a standard pyspark.ml pair so it
 composes with Pipelines. The fitted model is a TABLE of stumps (persistable
-parquet — A13), not an opaque object.
+parquet — A13), not an opaque object, and ``transform`` is one row-wise
+projection of its input (``boosting.score_model``): no shuffle, no join
+and no read of ``idCol``, so every input row is scored on its own.
 """
 
 from __future__ import annotations
@@ -102,7 +104,6 @@ class AdaBoostMHClassifier(Estimator, _ABParams):
         )
         model = AdaBoostMHModel(
             stumps_df=boosting.stumps_to_df(spark, stumps),
-            num_classes=self.getOrDefault(self.numClasses),
             summary=[
                 Row(t=s.t, feature=s.feature, threshold=s.threshold, z=s.z, norm=s.norm)
                 for s in stumps
@@ -113,8 +114,10 @@ class AdaBoostMHClassifier(Estimator, _ABParams):
 
 
 class AdaBoostMHModel(Model, _ABParams):
-    """Fitted strong hypothesis; `transform` appends per-class scores and the
-    predicted label set (classes with positive margin).
+    """Fitted strong hypothesis.  `transform` keeps every input column, in
+    order, and appends ``scores``, the K margins H(x)[l] in class order, and
+    ``predicted_labels``, the classes with positive margin.  K is the length
+    of the stumps' votes.
 
     ``summary`` is the training record, one ``Row(t, feature, threshold, z,
     norm)`` per round, kept on the driver (no Spark job): the product of
@@ -122,63 +125,34 @@ class AdaBoostMHModel(Model, _ABParams):
     1999).  A model loaded from a table has none."""
 
     def __init__(
-        self,
-        stumps_df: DataFrame | None = None,
-        num_classes: int = 10,
-        summary: list[Row] | None = None,
+        self, stumps_df: DataFrame | None = None, summary: list[Row] | None = None
     ):
         super().__init__()
         self.stumps_df = stumps_df
-        self._num_classes = num_classes
         self.summary = summary
 
     def _transform(self, dataset: DataFrame) -> DataFrame:
+        # the input row rides in one struct, so its columns pass through as
+        # they are, even one named ``embedding`` that is not featuresCol
         emb = dataset.select(
-            F.col(self.getOrDefault(self.idCol)).alias("vec_id"),
+            F.struct("*").alias("row"),
             F.col(self.getOrDefault(self.featuresCol))
             .cast("array<double>")
             .alias("embedding"),
         )
-        scored = boosting.score_model(emb, self.stumps_df)
-        # one (class, score) per class and row: a class that repeats within an
-        # id's list means the id names more than one input row
-        duplicate = F.raise_error(
-            F.concat(F.lit("transform: duplicate id "), F.col("id").cast("string"))
+        return boosting.score_model(emb, self.stumps_df).select(
+            "row.*",
+            "scores",
+            F.filter(
+                F.sequence(F.lit(0), F.size("scores") - 1),
+                lambda l: F.col("scores")[l] > 0,
+            ).alias("predicted_labels"),
         )
-        wide = (
-            scored.groupBy("id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("class", "score"))
-                ).alias("cs")
-            )
-            .select(
-                "id",
-                F.when(F.size(F.array_distinct("cs.class")) < F.size("cs"), duplicate)
-                .otherwise(F.col("cs"))
-                .alias("cs"),
-            )
-            .select(
-                F.col("id").alias(self.getOrDefault(self.idCol)),
-                F.transform("cs", lambda s: s["score"]).alias("scores"),
-                F.filter(
-                    F.transform(
-                        "cs", lambda s: F.when(s["score"] > 0, s["class"])
-                    ),
-                    lambda c: c.isNotNull(),
-                ).alias("predicted_labels"),
-            )
-        )
-        return dataset.join(
-            wide,
-            dataset[self.getOrDefault(self.idCol)]
-            == wide[self.getOrDefault(self.idCol)],
-        ).drop(wide[self.getOrDefault(self.idCol)])
 
     # A13: model persistence — model-as-table round-trip
     def save_table(self, path: str) -> None:
         self.stumps_df.write.mode("overwrite").parquet(path)
 
     @classmethod
-    def load_table(cls, spark: SparkSession, path: str, num_classes: int = 10):
-        return cls(stumps_df=spark.read.parquet(path), num_classes=num_classes)
+    def load_table(cls, spark: SparkSession, path: str):
+        return cls(stumps_df=spark.read.parquet(path))

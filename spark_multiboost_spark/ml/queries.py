@@ -73,6 +73,12 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_tables(spark, sf_dir)["embeddings"]
 
 
+def _fixed_scores(emb: DataFrame, stumps=_STUMPS_FIXED) -> DataFrame:
+    """(id, class, score, pred) of ``emb`` under fixed stumps (A9)."""
+    sdf = boosting.stumps_to_df(emb.sparkSession, stumps)
+    return boosting._explode_margins(boosting.score_model(emb, sdf))
+
+
 def _weighted_uniform(emb: DataFrame) -> tuple[DataFrame, int]:
     m = emb.count()
     return (
@@ -314,9 +320,9 @@ FROM e CROSS JOIN (SELECT UNNEST(GENERATE_SERIES(0, {K - 1})) AS class) g
     group="A",
 )
 def stump_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7: h(x)[l] = v_l * phi(x) for the fixed stump (feature 3, theta 0)."""
-    h = boosting._add_stump(None, _STUMPS_FIXED[0])
-    return boosting._explode_margins(_emb(spark, sf_dir), h).select(
+    """A7: h(x)[l] = v_l * phi(x) for the fixed stump (feature 3, theta 0),
+    scored as a one-stump model."""
+    return _fixed_scores(_emb(spark, sf_dir), _STUMPS_FIXED[:1]).select(
         "id", "class", F.round("score", 6).alias("h")
     )
 
@@ -378,10 +384,9 @@ GROUP BY id, g.class
 )
 def score_fixed_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9: strong-model scoring H(x)[l] = sum_t v_tl phi_t(x) with the fixed
-    3-stump table (boosting.score_model: one row-wise projection)."""
-    emb = _emb(spark, sf_dir)
-    sdf = boosting.stumps_to_df(emb.sparkSession, _STUMPS_FIXED)
-    return boosting.score_model(emb, sdf).select(
+    3-stump table: boosting.score_model's K margins per row, one row-wise
+    projection, read one row per (id, class)."""
+    return _fixed_scores(_emb(spark, sf_dir)).select(
         "id", "class", F.round("score", 6).alias("score"), "pred"
     )
 
@@ -408,10 +413,10 @@ FROM scored s JOIN mlp ON s.id = mlp.id AND s.class = mlp.class
     group="A",
 )
 def fixed_model_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A11: Hamming loss of the fixed model vs the lifted labels."""
+    """A11: Hamming loss of the fixed model vs the lifted labels, over the
+    (id, class) pairs of the A9 scores."""
     emb = _emb(spark, sf_dir)
-    sdf = boosting.stumps_to_df(emb.sparkSession, _STUMPS_FIXED)
-    scored = boosting.score_model(emb, sdf)
+    scored = _fixed_scores(emb)
     mlp = boosting.mlp_long(emb, K)
     return boosting.hamming_loss(scored, mlp)
 
@@ -446,10 +451,10 @@ FROM conf
 )
 def fixed_model_micro_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A11 (cont.): micro-averaged precision/recall/F1 over all (i,l) pairs —
-    the multi-label metrics BoosTexter reports alongside Hamming loss."""
+    the multi-label metrics BoosTexter reports alongside Hamming loss, over
+    the (id, class) pairs of the A9 scores."""
     emb = _emb(spark, sf_dir)
-    sdf = boosting.stumps_to_df(emb.sparkSession, _STUMPS_FIXED)
-    scored = boosting.score_model(emb, sdf)
+    scored = _fixed_scores(emb)
     mlp = boosting.mlp_long(emb, K)
     j = scored.join(mlp, ["id", "class"])
     conf = j.agg(
@@ -521,12 +526,11 @@ def margin_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     mass = examples some label still misclassifies; the cum_frac curve is
     what the margin-theory bound is written over.
 
-    Scores are a row-wise projection (boosting.score_model); one hash-agg
-    to the per-example min, one to buckets — no corpus-sized shuffle
-    carries more than (id, margin)."""
+    Scores are a row-wise projection (boosting.score_model) read one row
+    per (id, class); one hash-agg to the per-example min, one to buckets —
+    no corpus-sized shuffle carries more than (id, margin)."""
     emb = _emb(spark, sf_dir)
-    sdf = boosting.stumps_to_df(emb.sparkSession, _STUMPS_FIXED)
-    scored = boosting.score_model(emb, sdf)
+    scored = _fixed_scores(emb)
     mlp = boosting.mlp_long(emb, K)
     norms = F.array(*[F.lit(v) for v in _VOTE_NORMS])
     margins = (
@@ -1030,12 +1034,11 @@ def calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     maximization), and this query quantifies exactly that — the standard
     post-hoc check before using H(x) as a probability.
 
-    Same shape as the other A11 metrics (row-wise scores, hash-aggs on
-    top); the bin means go through the decimal path so bucket stats are
-    accumulation-order-independent."""
+    Same shape as the other A11 metrics (row-wise scores read one row per
+    (id, class), hash-aggs on top); the bin means go through the decimal
+    path so bucket stats are accumulation-order-independent."""
     emb = _emb(spark, sf_dir)
-    sdf = boosting.stumps_to_df(emb.sparkSession, _STUMPS_FIXED)
-    scored = boosting.score_model(emb, sdf)
+    scored = _fixed_scores(emb)
     mlp = boosting.mlp_long(emb, K)
     binned = scored.join(mlp, ["id", "class"]).select(
         F.least(
@@ -1538,16 +1541,18 @@ def estimator_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D7 (cont.): the hash-checkable estimator twin (VERDICT r7 item 6) —
     fit AdaBoostMHClassifier for {D7_ROUNDS} rounds on embedding[1..{D7_FEATS}],
     persist the fitted stump table to parquet and read it BACK (A13 in the
-    path), then score the corpus with the reloaded model via the A9 shape.
-    Unlike q_d7_estimator_end_to_end (full loop, rows-only by contract),
-    the oracle here REPLAYS the training: {D7_ROUNDS} unrolled rounds of the
+    path), then score the corpus with the reloaded model via the A9 shape
+    (each row's K margins, read one row per (id, class)).  Unlike
+    q_d7_estimator_end_to_end (full loop, rows-only by contract), the
+    oracle here REPLAYS the training: {D7_ROUNDS} unrolled rounds of the
     A4/A5/A6 candidate search + A8 reweighting in materialized CTEs, then
     A9 scoring — so the trained model's actual predictions are value-hashed
     against DuckDB, not just row-counted.
 
     Scale shape: identical to the training loop's (one grouped agg + one
-    bounded window per round; scoring is one row-wise projection); the
-    4-feature slice bounds the ORACLE's candidate grid, not the engine's."""
+    bounded window per round; scoring is one row-wise projection, with no
+    id pivot); the 4-feature slice bounds the ORACLE's candidate grid, not
+    the engine's."""
     from .estimator import AdaBoostMHClassifier
 
     emb = _emb(spark, sf_dir)
@@ -1560,7 +1565,7 @@ def estimator_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(sf_scratch("d7", sf_dir), "stumps")
     model.stumps_df.write.mode("overwrite").parquet(path)
     reloaded = spark.read.parquet(path)
-    return boosting.score_model(emb4, reloaded).select(
+    return boosting._explode_margins(boosting.score_model(emb4, reloaded)).select(
         "id", "class", F.round("score", 6).alias("score"), "pred"
     )
 
@@ -1614,8 +1619,9 @@ def estimator_multilabel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cross-engine choice on 1e-16 summation-order bits.
 
     Scale shape: identical to q_d7_estimator_scored (one grouped agg + one
-    bounded window per round; scoring is one row-wise projection); the
-    label-set lift only flips y signs in the long frame, adding no rows."""
+    bounded window per round; scoring is one row-wise projection, with no
+    id pivot); the label-set lift only flips y signs in the long frame,
+    adding no rows."""
     from .estimator import AdaBoostMHClassifier
 
     emb = _emb(spark, sf_dir)
@@ -1632,7 +1638,7 @@ def estimator_multilabel(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(sf_scratch("d7ml", sf_dir), "stumps")
     model.stumps_df.write.mode("overwrite").parquet(path)
     reloaded = spark.read.parquet(path)
-    return boosting.score_model(emb4, reloaded).select(
+    return boosting._explode_margins(boosting.score_model(emb4, reloaded)).select(
         "id", "class", F.round("score", 6).alias("score"), "pred"
     )
 
@@ -1721,6 +1727,6 @@ def train_hash_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         feature_fraction=A12_FEAT_KEEP / D7_FEATS,
     )
     sdf = boosting.stumps_to_df(spark, stumps)
-    return boosting.score_model(emb4, sdf).select(
+    return boosting._explode_margins(boosting.score_model(emb4, sdf)).select(
         "id", "class", F.round("score", 6).alias("score"), "pred"
     )

@@ -337,38 +337,122 @@ def test_score_model_rejects_empty_stump_table(stump_unit, spark):
         boosting.score_model(emb, boosting.stumps_to_df(spark, []))
 
 
-def test_transform_rejects_duplicate_id(stump_unit, spark):
-    """Two input rows with one id cannot be told apart by the id pivot:
-    transform fails and names the id instead of returning merged scores."""
+def test_transform_scores_duplicate_ids_row_by_row(stump_unit, spark):
+    """transform never reads the id: two input rows that share an id but
+    hold different embeddings are two output rows, each scored as its own
+    embedding (numpy reference)."""
+    import numpy as np
+
+    from perfbench import reference
     from spark_multiboost_spark.ml.estimator import AdaBoostMHClassifier
 
     emb, _, _ = stump_unit
-    model = AdaBoostMHClassifier(numRounds=1, numClasses=2).fit(emb)
-    assert model.transform(emb).count() == 6
-    dup = emb.unionByName(emb.filter(F.col("vec_id") == 4))
-    with pytest.raises(Exception, match="duplicate id 4"):
-        model.transform(dup).collect()
-
-
-def test_score_model_plan_is_one_projection(stump_unit, spark, tmp_path):
-    """Scoring a parquet-read frame is a scan and a projection: the
-    optimized and physical plans hold no join, aggregate or exchange."""
-    emb, _, _ = stump_unit
-    emb.write.parquet(str(tmp_path / "emb"))
-    stumps = [
-        boosting.Stump(t=0, feature=1, threshold=0.3, z=0.0, votes=[0.5, -0.5]),
-        boosting.Stump(t=1, feature=2, threshold=1.0, z=0.0, votes=[0.25, 0.25]),
-    ]
-    scored = boosting.score_model(
-        spark.read.parquet(str(tmp_path / "emb")), boosting.stumps_to_df(spark, stumps)
+    model = AdaBoostMHClassifier(numRounds=2, numClasses=2).fit(emb)
+    twin = emb.filter(F.col("vec_id") == 4).select(
+        "vec_id", F.array(F.lit(0.05), F.lit(2.0)).alias("embedding"), "label"
     )
-    qe = scored._jdf.queryExecution()
+    rows = model.transform(emb.unionByName(twin)).collect()
+    assert len(rows) == 7
+    assert sorted(r["vec_id"] for r in rows) == [1, 2, 3, 4, 4, 5, 6]
+    stumps = model.stumps_df.orderBy("t").collect()
+    twins = [r["scores"] for r in rows if r["vec_id"] == 4]
+    assert twins[0] != twins[1], "the twin rows must score differently"
+    for r in rows:
+        want = reference.score(
+            np.array([r["embedding"]]),
+            np.array([s.feature for s in stumps]),
+            np.array([s.threshold for s in stumps]),
+            np.array([s.votes for s in stumps]),
+        )[0]
+        assert np.abs(np.array(r["scores"]) - want).max() < 1e-12, r
+        assert list(r["predicted_labels"]) == list(np.flatnonzero(want > 0)), r
+
+
+def _one_projection(df) -> None:
+    """The optimized and physical plans of ``df`` hold no join, aggregate
+    or exchange."""
+    qe = df._jdf.queryExecution()
     optimized, physical = qe.optimizedPlan().toString(), qe.executedPlan().toString()
     for node in ("Join", "Aggregate"):
         assert node not in optimized, optimized
     for node in ("Join", "Aggregate", "Exchange"):
         assert node not in physical, physical
-    assert scored.count() == 6 * 2
+
+
+_TWO_STUMPS = [
+    boosting.Stump(t=0, feature=1, threshold=0.3, z=0.0, votes=[0.5, -0.5]),
+    boosting.Stump(t=1, feature=2, threshold=1.0, z=0.0, votes=[0.25, 0.25]),
+]
+
+
+def test_score_model_plan_is_one_projection(stump_unit, spark, tmp_path):
+    """Scoring a parquet-read frame is a scan and a projection that adds the
+    K margins to each row."""
+    emb, _, _ = stump_unit
+    emb.write.parquet(str(tmp_path / "emb"))
+    scored = boosting.score_model(
+        spark.read.parquet(str(tmp_path / "emb")),
+        boosting.stumps_to_df(spark, _TWO_STUMPS),
+    )
+    _one_projection(scored)
+    assert scored.columns == emb.columns + ["scores"]
+    assert scored.count() == 6
+
+
+def test_transform_plan_is_one_projection(stump_unit, spark, tmp_path):
+    """transform of a parquet-read frame is the same projection: no id
+    pivot and no join back to the input."""
+    from spark_multiboost_spark.ml.estimator import AdaBoostMHModel
+
+    emb, _, _ = stump_unit
+    emb.write.parquet(str(tmp_path / "emb"))
+    model = AdaBoostMHModel(stumps_df=boosting.stumps_to_df(spark, _TWO_STUMPS))
+    out = model.transform(spark.read.parquet(str(tmp_path / "emb")))
+    _one_projection(out)
+    assert out.count() == 6
+
+
+def test_transform_job_count(stump_unit, spark):
+    """Regression guard, counted by Spark itself: transforming and
+    collecting a persisted frame launches 2 Spark jobs, the stump table's
+    collect and the result's (4 while transform pivoted the scores by id
+    and joined them back)."""
+    from spark_multiboost_spark.ml.estimator import AdaBoostMHModel
+
+    emb, _, _ = stump_unit
+    model = AdaBoostMHModel(stumps_df=boosting.stumps_to_df(spark, _TWO_STUMPS))
+    df = emb.persist()
+    df.count()
+    sc = spark.sparkContext
+    group = "test_transform_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        model.transform(df).select("vec_id", "scores", "predicted_labels").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        df.unpersist()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs == 2, f"transform launched {n_jobs} Spark jobs"
+
+
+def test_transform_keeps_columns_without_id(spark):
+    """A frame with no id column transforms: its columns pass through in
+    order, an ``embedding`` column that is not featuresCol included, and
+    ``scores`` and ``predicted_labels`` follow."""
+    from spark_multiboost_spark.ml.estimator import AdaBoostMHModel
+
+    df = spark.createDataFrame(
+        [("a", [0.1, 2.0], 7), ("b", [0.9, 0.5], 8)],
+        "name STRING, x ARRAY<DOUBLE>, embedding INT",
+    )
+    model = AdaBoostMHModel(stumps_df=boosting.stumps_to_df(spark, _TWO_STUMPS))
+    out = model.transform(df, {model.featuresCol: "x"})
+    assert out.columns == ["name", "x", "embedding", "scores", "predicted_labels"]
+    rows = sorted(out.collect(), key=lambda r: r["name"])
+    assert [r["embedding"] for r in rows] == [7, 8]
+    # row a: phi_1 = -1, phi_2 = +1; row b: phi_1 = +1, phi_2 = -1
+    assert [list(r["scores"]) for r in rows] == [[-0.25, 0.75], [0.25, -0.75]]
+    assert [list(r["predicted_labels"]) for r in rows] == [[1], [0]]
 
 
 def test_weight_update_normalizes(stump_unit, spark):
@@ -393,7 +477,9 @@ def test_training_learns_separable_data(spark):
         rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>, label INT"
     )
     stumps = boosting.train(spark, emb, num_rounds=6, num_classes=k)
-    scored = boosting.score_model(emb, boosting.stumps_to_df(spark, stumps))
+    scored = boosting._explode_margins(
+        boosting.score_model(emb, boosting.stumps_to_df(spark, stumps))
+    )
     mlp = boosting.mlp_long(emb, k)
     loss = boosting.hamming_loss(scored, mlp).collect()[0]["hamming_loss"]
     assert loss < 1.0 / k / 2  # far below the all-negative baseline (1/3)
@@ -436,7 +522,9 @@ def test_training_on_fixture_embeddings(spark, sf_dir):
     emb = load_tables(spark, sf_dir)["embeddings"]
     mlp = boosting.mlp_long(emb, 10)
     stumps = boosting.train(spark, emb, num_rounds=3, num_classes=10)
-    scored = boosting.score_model(emb, boosting.stumps_to_df(spark, stumps))
+    scored = boosting._explode_margins(
+        boosting.score_model(emb, boosting.stumps_to_df(spark, stumps))
+    )
     loss = boosting.hamming_loss(scored, mlp).collect()[0]["hamming_loss"]
     assert loss <= 0.1 + 1e-9
 
@@ -574,7 +662,9 @@ def test_multilabel_training_learns_separable_sets(spark):
     stumps = boosting.train(
         spark, emb, num_rounds=6, num_classes=6, label_set_col="labels"
     )
-    scored = boosting.score_model(emb, boosting.stumps_to_df(spark, stumps))
+    scored = boosting._explode_margins(
+        boosting.score_model(emb, boosting.stumps_to_df(spark, stumps))
+    )
     mlp = boosting.mlp_long_multi(emb, 6)
     loss = boosting.hamming_loss(scored, mlp).collect()[0]["hamming_loss"]
     assert loss < 2.0 / 6 / 2  # far below the all-negative baseline

@@ -199,12 +199,12 @@ def test_scorer_matches_numpy(spark, k, levels, stumps):
     )
     sdf = boosting.stumps_to_df(spark, model)
     got = np.zeros_like(want)
-    for r in boosting.score_model(emb, sdf).collect():
+    for r in boosting._explode_margins(boosting.score_model(emb, sdf)).collect():
         got[r["id"], r["class"]] = r["score"]
         assert r["pred"] == (1 if want[r["id"], r["class"]] > 0 else -1)
     assert np.abs(got - want).max() < 1e-12
     rows = sorted(
-        AdaBoostMHModel(stumps_df=sdf, num_classes=k).transform(emb).collect(),
+        AdaBoostMHModel(stumps_df=sdf).transform(emb).collect(),
         key=lambda r: r["vec_id"],
     )
     assert [r["vec_id"] for r in rows] == list(range(len(x)))
