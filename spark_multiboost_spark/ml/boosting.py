@@ -23,10 +23,11 @@ mount was empty at survey time, SURVEY.md §0):
   checkpointed from round to round (the reference re-caches its weighted
   RDD per round).  The sampleRate of A12 is one hash predicate on
   (id, seed + t) per round.
-- AdaBoostMHModel.predict [R] -> :func:`score_model` (A9): the same sum
-  H(x) that :func:`train`'s weights read (:func:`_add_stump`), the K
-  margins of each input row as one array column — a row-wise projection
-  over the collected stump table, with no join, shuffle or agg.
+- AdaBoostMHModel.predict [R] -> :func:`score_model` (A9): the same H(x)
+  that :func:`train`'s weights read, one :func:`_margins` expression of
+  the stump list giving the K margins of each input row as one array
+  column — a row-wise projection over the collected stump table, with no
+  join, shuffle or agg.
 
 Math (Schapire & Singer 1999, BoosTexter 2000):
   phi_{j,theta}(x) = +1 if x[j] > theta else -1
@@ -44,8 +45,9 @@ and pre-aggregates them by (feature, value) with the K classes folded into
 values| rows per feature, not m x K; the per-feature window is a d-way
 shuffle (it was d x K with the long-form (feature, class) window), and the
 kernel's ``n_buckets`` salting (:func:`stump_class_weights_salted`) is the
-way out when one feature is skewed.  The weight expression grows by one
-term per round (O(t) per row), the price of carrying no state.  Instance
+way out when one feature is skewed.  The weight expression does O(t) work
+per row, the price of carrying no state, but its code size is constant in
+T: H(x) is one ``aggregate`` over a literal stump array.  Instance
 sampling is a mask inside the search's aggregate, never a sampled-id join.
 Feature indices are 1-based everywhere (matches SQL element_at/list
 indexing in both engines).
@@ -57,7 +59,7 @@ import math
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -104,26 +106,33 @@ def mlp_long_multi(emb: DataFrame, num_classes: int = 10) -> DataFrame:
     ).select("id", "class", _label_sign(F.col("class"), label_set=True).alias("y"))
 
 
-def _phi(value: Column, threshold: float) -> Column:
+def _phi(value: Column, threshold: float | Column) -> Column:
     """phi(x) = +1 above the cut, -1 at or below it."""
     return F.when(value > threshold, 1.0).otherwise(-1.0)
 
 
-def _vote(s: Stump, cls: int | Column) -> Column:
-    """v_s[cls]: a literal for a class index, a lookup for a class column."""
-    if isinstance(cls, int):
-        return F.lit(s.votes[cls])
-    return F.element_at(F.array(*[F.lit(v) for v in s.votes]), cls + 1)
+def _margins(stumps: Sequence[Stump | Row], num_classes: int) -> Column:
+    """H(x) = sum_s v_s phi_s(x), the K margins of the row's ``embedding`` as
+    one array column: an ``aggregate`` over one literal array of the
+    stumps' (feature, threshold, votes) structs in t order, from K zeros,
+    adding v_s[l] phi_s to class l per stump.  Spark evaluates ``aggregate``
+    outside whole-stage codegen, so the generated code does not grow with T
+    (an unrolled K·T sum outgrows Janino's 64 KB method limit near
+    T = 100); a row still does O(K T) work."""
+    table = F.array(*[
+        F.struct(
+            F.lit(s.feature).alias("feature"),
+            F.lit(float(s.threshold)).alias("threshold"),
+            F.array(*[F.lit(float(v)) for v in s.votes]).alias("votes"),
+        )
+        for s in stumps
+    ])
 
+    def add(h: Column, s: Column) -> Column:
+        phi = _phi(F.element_at("embedding", s["feature"]), s["threshold"])
+        return F.zip_with(h, s["votes"], lambda a, v: a + v * phi)
 
-def _add_stump(margins: list[Column] | None, s: Stump) -> list[Column]:
-    """H_{t+1}(x)[l] = H_t(x)[l] + v_s[l] phi_s(x) for every class l, with
-    phi_s read from the row's ``embedding``; ``None`` is H_0 = 0.  Adding
-    one stump costs O(K) column expressions, so a loop that extends H
-    round by round builds each round's weights in O(K), not O(K·t)."""
-    phi = _phi(F.element_at("embedding", s.feature), s.threshold)
-    terms = [_vote(s, l) * phi for l in range(len(s.votes))]
-    return terms if margins is None else [h + v for h, v in zip(margins, terms)]
+    return F.aggregate(table, F.array(*[F.lit(0.0)] * num_classes), add)
 
 
 def _log_factor(y: Column, h: Column, log_norm: float) -> Column:
@@ -140,7 +149,7 @@ def _class_weight(
 ) -> Column:
     """D_t(i, l) in closed form (Schapire & Singer 1999): 1/(mK) ·
     exp(-y H_{t-1}(x)[l] - sum_{s<t} ln Z_s), with ``margin`` = H_{t-1}[l]
-    (:func:`_add_stump`) and ``log_norm`` the sum of ln Z_s; 1/(mK) at
+    (:func:`_margins`) and ``log_norm`` the sum of ln Z_s; 1/(mK) at
     t = 0 (``margin`` None).  Log space keeps the exponent at or below
     ln(mK), so no weight overflows however large |H| grows (a plain
     exp(-yH) / prod Z does once |H| > 709)."""
@@ -158,26 +167,30 @@ def init_weights(mlp: DataFrame, m: int, num_classes: int) -> DataFrame:
 
 def _weight_rows(
     emb: DataFrame,
-    margins: list[Column] | None,
-    log_norm: float,
+    stumps: Sequence[Stump],
     m: int,
     num_classes: int,
     label_set: bool,
 ) -> DataFrame:
     """Round t's weights as columns of the example rows: ``emb`` (``embedding``
     and ``label`` or ``labels``) plus ``y_l`` and ``weight_l`` = D_t(i, l)
-    for every class l, a pure function of the row and the stumps so far
-    (their ``margins`` and ``log_norm``, see :func:`_class_weight`)."""
+    for every class l, a pure function of the row and the ``stumps`` found so
+    far (:func:`_class_weight`).  H_{t-1} is one column, ``h``
+    (:func:`_margins`), computed once per row and read by every class;
+    sum_{s<t} ln Z_s is summed in t order on the driver."""
     classes = range(num_classes)
     signed = emb.select(
-        "*", *[_label_sign(F.lit(l), label_set).alias(f"y_{l}") for l in classes]
-    )
-    hs = margins or [None] * num_classes
-    return signed.select(
         "*",
+        *[_label_sign(F.lit(l), label_set).alias(f"y_{l}") for l in classes],
+        *([_margins(stumps, num_classes).alias("h")] if stumps else []),
+    )
+    h = [F.col("h")[l] for l in classes] if stumps else [None] * num_classes
+    log_norm = sum(math.log(s.norm) for s in stumps)
+    return signed.select(
+        *emb.columns,
+        *[f"y_{l}" for l in classes],
         *[
-            _class_weight(F.col(f"y_{l}"), hs[l], log_norm, m, num_classes)
-            .alias(f"weight_{l}")
+            _class_weight(F.col(f"y_{l}"), h[l], log_norm, m, num_classes).alias(f"weight_{l}")
             for l in classes
         ],
     )
@@ -524,9 +537,8 @@ def stumps_to_df(spark: SparkSession, stumps: list[Stump]) -> DataFrame:
     pickle/worker exchange on EVERY materialization (A/B on the boosting
     family: q_a9_score_model CPU 15.1 → 1.2 s, q_a12 19.9 → 5.6 s,
     q_d7_estimator_scored 15.2 → 7.0 s; identical row signatures).  It is
-    still a job, not a local relation: ``range(1)`` plus an explode, one
-    task per defaultParallelism slice, with the ≤ num_rounds rows all in
-    one of them."""
+    still a job, not a local relation: a one-partition ``range(1)`` plus an
+    explode, one task holding the ≤ num_rounds rows."""
     from ..session import local_df
 
     return local_df(
@@ -549,7 +561,8 @@ def update_weights(
     phi = feats.filter(F.col("feature") == stump.feature).select(
         "id", _phi(F.col("value"), stump.threshold).alias("phi")
     )
-    h = _vote(stump, F.col("class")) * F.col("phi")
+    vote = F.element_at(F.array(*[F.lit(v) for v in stump.votes]), F.col("class") + 1)
+    h = vote * F.col("phi")
     factor = _log_factor(F.col("y"), h, math.log(stump.norm))
     return weighted.join(phi, "id").select(
         "id", "class", "y", (F.col("weight") * F.exp(factor)).alias("weight")
@@ -587,8 +600,8 @@ def train(
     normalizer Z_t.  Shape per round — one chain over the persisted
     examples ending in a 1-row collect:
 
-      1. the K weights per row (m·K exp), from H_{t-1}, which grows by one
-         stump per round (:func:`_add_stump`);
+      1. the K weights per row (m·K exp), from H_{t-1}, one expression of
+         the stumps found so far (:func:`_weight_rows`, :func:`_margins`);
       2. explode (feature, value);
       3. the search of :func:`fit_stump` (:func:`_best_cut`):
          ``groupBy(feature, value)``, the cut-mass window, one ``min(struct)``.
@@ -617,23 +630,16 @@ def train(
     label_set = label_set_col is not None
     label = F.col(label_set_col).alias("labels") if label_set else F.col("label")
     emb = emb.select(F.col("vec_id").alias("id"), "embedding", label).persist()
-    m = emb.count()
+    # bounded: the one pre-loop action, a 1-row agg of m and the feature count
+    m, n_feats = emb.agg(F.count(F.lit(1)), F.max(F.size("embedding"))).collect()[0]
     if sample_pred is None and sample_fraction is not None:
         sample_pred = _hash_sample(sample_fraction, seed)
-    # loop-invariant: feature count never changes between rounds, so the
-    # one action that computes it runs once, not once per round
-    n_feats = (
-        emb.agg(F.max(F.size("embedding"))).collect()[0][0]  # bounded: 1-row max agg
-        if feature_fraction is not None
-        else None
-    )
     sampled = sample_pred is not None
     carry = [f"{c}_{l}" for l in range(num_classes) for c in ("y", "weight")]
     carry += ["kept"] if sampled else []
     stumps: list[Stump] = []
-    margins, log_norm = None, 0.0  # H_{t-1} and sum_{s<t} ln Z_s
     for t in range(num_rounds):
-        rows = _weight_rows(emb, margins, log_norm, m, num_classes, label_set)
+        rows = _weight_rows(emb, stumps, m, num_classes, label_set)
         if sampled:
             rows = rows.withColumn("kept", sample_pred(t))
         rows = _explode(rows, *carry)
@@ -641,34 +647,28 @@ def train(
             keep = max(1, int(n_feats * feature_fraction))
             # deterministic per-round rotation of the feature subset
             rows = rows.filter(((F.col("feature") + t) % n_feats) < keep)
-        stump = _best_cut(rows, m, num_classes, t, sampled)
-        stumps.append(stump)
-        margins = _add_stump(margins, stump)
-        log_norm += math.log(stump.norm)
+        stumps.append(_best_cut(rows, m, num_classes, t, sampled))
     emb.unpersist()
     return stumps
 
 
 def score_model(emb: DataFrame, stumps_df: DataFrame) -> DataFrame:
     """A9 (reference: AdaBoostMHModel.predict [R]): H(x)[l] = sum_t h_t(x)[l],
-    the sum :func:`train` builds for its weights (:func:`_add_stump`, folded
-    in t order), as one row-wise projection of ``emb`` with no join, shuffle
-    or aggregate.  Returns every ``emb`` column plus ``scores``, the K
-    margins in class order.
+    the expression :func:`train` builds for its weights (:func:`_margins`
+    of the stumps in t order), as one row-wise projection of ``emb`` with no
+    join, shuffle or aggregate.  Returns every ``emb`` column plus
+    ``scores``, the K margins in class order.
 
     The stump table is collected to the driver, which costs one job: a
-    :func:`stumps_to_df` table is ``range(1)`` plus an explode
-    (defaultParallelism tasks), a parquet-read one a scan.
+    :func:`stumps_to_df` table is a 1-task job, a parquet-read one a scan.
 
     Raises ValueError when the stump table is empty."""
     # bounded: one row per boosting round
     rows = stumps_df.select("t", "feature", "threshold", "votes").collect()
     if not rows:
         raise ValueError("score_model: the stump table is empty (a model needs 1+ rounds)")
-    margins = None
-    for r in sorted(rows, key=lambda r: r.t):
-        margins = _add_stump(margins, Stump(r.t, r.feature, r.threshold, math.nan, r.votes))
-    return emb.select("*", F.array(*margins).alias("scores"))
+    h = _margins(sorted(rows, key=lambda r: r.t), len(rows[0].votes))
+    return emb.select("*", h.alias("scores"))
 
 
 def _explode_margins(scored: DataFrame) -> DataFrame:

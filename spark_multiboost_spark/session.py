@@ -89,10 +89,10 @@ def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     2.4/3.8/5.3 s as createDataFrame vs 0.7/1.1/2.3 s as literals, and
     ``coalesce(1)`` on the RDD form is WORSE (26–32 s: one task pays all
     slices' worker roundtrips serially).  Embedding the rows as a literal
-    struct array over ``range(1)`` keeps every materialization a 1-task
-    JVM-only job — the correct shape for any model-sized or
-    driver-computed-result table at ANY corpus scale (the table size is
-    bounded by the model/round count, not the data).
+    struct array over a one-partition ``range(1)`` keeps every
+    materialization a 1-task JVM-only job — the correct shape for any
+    model-sized or driver-computed-result table at ANY corpus scale (the
+    table size is bounded by the model/round count, not the data).
 
     Bit-exact: ``F.lit`` preserves Python float bits; every field is cast
     to the declared type exactly as createDataFrame's schema did.  Falls
@@ -117,7 +117,7 @@ def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
             fields.append(col.cast(f.dataType).alias(f.name))
         structs.append(F.struct(*fields))
     return (
-        spark.range(1)
+        spark.range(1, numPartitions=1)
         .select(F.explode(F.array(*structs)).alias("_s"))
         .select("_s.*")
     )

@@ -159,6 +159,28 @@ def test_fit_job_count(spark, sampling):
     assert n_jobs == 11, f"fit launched {n_jobs} Spark jobs"
 
 
+def test_train_feature_fraction_job_count(spark):
+    """Regression guard, counted by Spark itself: ``feature_fraction``
+    reads the feature count from the one pre-loop action that also counts
+    the rows, so a T=2 train launches 11 Spark jobs with it as without it
+    (13 while the feature count was an action of its own)."""
+    rows = [
+        (i, [(i % 9) / 9.0, float(i % 2), ((i * 7) % 5) / 5.0], i % 3) for i in range(30)
+    ]
+    emb = spark.createDataFrame(
+        rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>, label INT"
+    )
+    sc = spark.sparkContext
+    group = "test_train_feature_fraction_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        boosting.train(spark, emb, num_rounds=2, num_classes=3, feature_fraction=0.5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs == 11, f"train launched {n_jobs} Spark jobs"
+
+
 def test_train_keeps_no_weight_state(spark, monkeypatch):
     """The weights are a closed-form expression of the stumps found so far:
     train never reweights a frame, never checkpoints one, and persists only
@@ -291,12 +313,8 @@ def test_closed_form_weights_finite_past_exp_overflow(spark):
         stumps.append(boosting.Stump(t, f, theta, 0.0, votes, norm=float(w.sum())))
         w = w / w.sum()
     assert np.abs(h).max() > 709, "fixture must overflow a plain exp(-yH)"
-    margins = None
-    for s in stumps:
-        margins = boosting._add_stump(margins, s)
-    log_norm = sum(math.log(s.norm) for s in stumps)
     got = boosting._weight_rows(
-        emb, margins, log_norm, len(rows), k, label_set=False
+        emb, stumps, len(rows), k, label_set=False
     ).select(*[f"weight_{l}" for l in range(k)]).collect()
     ws = np.array([list(r) for r in got])
     assert np.isfinite(ws).all()
@@ -416,7 +434,7 @@ def test_transform_job_count(stump_unit, spark):
     """Regression guard, counted by Spark itself: transforming and
     collecting a persisted frame launches 2 Spark jobs, the stump table's
     collect and the result's (4 while transform pivoted the scores by id
-    and joined them back)."""
+    and joined them back).  The stump table's collect is one task."""
     from spark_multiboost_spark.ml.estimator import AdaBoostMHModel
 
     emb, _, _ = stump_unit
@@ -431,8 +449,13 @@ def test_transform_job_count(stump_unit, spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         df.unpersist()
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert n_jobs == 2, f"transform launched {n_jobs} Spark jobs"
+    tracker = sc.statusTracker()
+    jobs = sorted(tracker.getJobIdsForGroup(group))
+    assert len(jobs) == 2, f"transform launched {len(jobs)} Spark jobs"
+    tasks = sum(
+        tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(jobs[0]).stageIds
+    )
+    assert tasks == 1, f"the stump table's collect ran {tasks} tasks"
 
 
 def test_transform_keeps_columns_without_id(spark):
@@ -453,6 +476,76 @@ def test_transform_keeps_columns_without_id(spark):
     # row a: phi_1 = -1, phi_2 = +1; row b: phi_1 = +1, phi_2 = -1
     assert [list(r["scores"]) for r in rows] == [[-0.25, 0.75], [0.25, -0.75]]
     assert [list(r["predicted_labels"]) for r in rows] == [[1], [0]]
+
+
+def _codegen(df) -> list[tuple[str, int]]:
+    """(source, largest method's bytecode size) of every whole-stage codegen
+    subtree in the physical plan of ``df``, with each double literal in the
+    source written as ``0D``; the size is -1 when the subtree fails to
+    compile (Janino's 64 KB method limit)."""
+    import re
+
+    debug = df.sparkSession._jvm.org.apache.spark.sql.execution.debug.package
+    seq = debug.codegenStringSeq(df._jdf.queryExecution().executedPlan())
+    return [
+        (
+            re.sub(r"-?\d+\.\d+(E-?\d+)?D", "0D", seq.apply(i)._2()),
+            seq.apply(i)._3().maxMethodCodeSize(),
+        )
+        for i in range(seq.size())
+    ]
+
+
+def test_margin_code_size_is_constant_in_t(spark):
+    """H(x) is one expression over a literal stump array: the transform of a
+    100-stump model and the weights after 100 stumps (K = 10) generate the
+    same code as with 2 stumps, where an unrolled sum outgrew the 64 KB
+    method limit and fell back to interpreted code.  The 100-stump scores
+    equal numpy's; votes are multiples of 1/8, so every sum is exact."""
+    import numpy as np
+
+    from perfbench import reference
+    from spark_multiboost_spark.ml.estimator import AdaBoostMHModel
+
+    k, d, m = 10, 6, 200
+    rng = np.random.default_rng(7)
+    x = rng.standard_normal((m, d))
+    emb = spark.createDataFrame(
+        [(i, [float(v) for v in row], i % k) for i, row in enumerate(x)],
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>, label INT",
+    )
+    stumps = [
+        boosting.Stump(
+            t, int(rng.integers(1, d + 1)), float(rng.standard_normal()), 0.0,
+            [float(v) for v in rng.integers(-800, 801, k) / 8], norm=1.0 + rng.random(),
+        )
+        for t in range(100)
+    ]
+
+    def transform(n):
+        model = AdaBoostMHModel(stumps_df=boosting.stumps_to_df(spark, stumps[:n]))
+        return model.transform(emb)
+
+    def weights(n):
+        rows = emb.select(F.col("vec_id").alias("id"), "embedding", "label")
+        return boosting._weight_rows(rows, stumps[:n], m, k, label_set=False)
+
+    for build in (transform, weights):
+        small, large = _codegen(build(2)), _codegen(build(100))
+        assert [size for _, size in large] == [size for _, size in small]
+        assert all(size > 0 for _, size in large), (build.__name__, large)
+        assert large == small, build.__name__
+    want = reference.score(
+        x,
+        np.array([s.feature for s in stumps]),
+        np.array([s.threshold for s in stumps]),
+        np.array([s.votes for s in stumps]),
+    )
+    rows = sorted(transform(100).collect(), key=lambda r: r["vec_id"])
+    assert np.abs(np.array([r["scores"] for r in rows]) - want).max() < 1e-12
+    assert [list(r["predicted_labels"]) for r in rows] == [
+        list(np.flatnonzero(s > 0)) for s in want
+    ]
 
 
 def test_weight_update_normalizes(stump_unit, spark):
