@@ -41,7 +41,7 @@ def main() -> None:
     emb = load_tables(spark, sf_dir)["embeddings"]
     model = AdaBoostMHClassifier(numRounds=3, numClasses=10).fit(emb)
     # each row's K margins, one row per (id, class) for the loss
-    scored = boosting._explode_margins(boosting.score_model(emb, model.stumps_df))
+    scored = boosting._explode_margins(boosting.score_model(emb, model.stumps))
     mlp = boosting.mlp_long(emb, 10)
     boosting.hamming_loss(scored, mlp).show()
     print("stump table (model-as-DataFrame):")

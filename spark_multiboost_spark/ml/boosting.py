@@ -26,8 +26,8 @@ mount was empty at survey time, SURVEY.md §0):
 - AdaBoostMHModel.predict [R] -> :func:`score_model` (A9): the same H(x)
   that :func:`train`'s weights read, one :func:`_margins` expression of
   the stump list giving the K margins of each input row as one array
-  column — a row-wise projection over the collected stump table, with no
-  join, shuffle or agg.
+  column — a row-wise projection over the stump list, with no job, join,
+  shuffle or agg.
 
 Math (Schapire & Singer 1999, BoosTexter 2000):
   phi_{j,theta}(x) = +1 if x[j] > theta else -1
@@ -529,16 +529,11 @@ def fit_stump(
 def stumps_to_df(spark: SparkSession, stumps: list[Stump]) -> DataFrame:
     """Model-as-table (SURVEY §1.2): (t, feature, threshold, z, votes).
 
-    Built as a literal-expression plan (``session.local_df``, r14
-    optimization round, guide §4.1/§6.3): the model is embedded in the
-    PLAN, so every broadcast build, parquet write, and collect of the stump
-    table is a JVM-only job with no Python-worker roundtrip — the
-    old ``createDataFrame`` form's 32 parallelized slices each paid a
-    pickle/worker exchange on EVERY materialization (A/B on the boosting
-    family: q_a9_score_model CPU 15.1 → 1.2 s, q_a12 19.9 → 5.6 s,
-    q_d7_estimator_scored 15.2 → 7.0 s; identical row signatures).  It is
-    still a job, not a local relation: a one-partition ``range(1)`` plus an
-    explode, one task holding the ≤ num_rounds rows."""
+    Built as a literal-expression plan (``session.local_df``): the stumps
+    are embedded in the PLAN, so every broadcast build, parquet write and
+    collect of the table is a JVM-only job with no Python-worker roundtrip.
+    It is still a job, not a local relation: a one-partition ``range(1)``
+    plus an explode, one task holding the ≤ num_rounds rows."""
     from ..session import local_df
 
     return local_df(
@@ -556,7 +551,7 @@ def update_weights(
     aggregate.  :func:`train` does not call it: its weights are the same
     factors in closed form.  It stays public for ``q_a8_weight_update`` and
     the benchmark's traced copy of ``train`` (perfbench/workloads.py), which
-    ROADMAP.md's open item 1 deletes.  With a single earlier stump it
+    ROADMAP.md's item 4 deletes.  With a single earlier stump it
     computes the same floats as :func:`train`'s round-2 weights."""
     phi = feats.filter(F.col("feature") == stump.feature).select(
         "id", _phi(F.col("value"), stump.threshold).alias("phi")
@@ -652,22 +647,21 @@ def train(
     return stumps
 
 
-def score_model(emb: DataFrame, stumps_df: DataFrame) -> DataFrame:
+def score_model(emb: DataFrame, stumps: Sequence[Stump | Row]) -> DataFrame:
     """A9 (reference: AdaBoostMHModel.predict [R]): H(x)[l] = sum_t h_t(x)[l],
     the expression :func:`train` builds for its weights (:func:`_margins`
     of the stumps in t order), as one row-wise projection of ``emb`` with no
     join, shuffle or aggregate.  Returns every ``emb`` column plus
     ``scores``, the K margins in class order.
 
-    The stump table is collected to the driver, which costs one job: a
-    :func:`stumps_to_df` table is a 1-task job, a parquet-read one a scan.
+    ``stumps`` are :class:`Stump` objects or rows of a stump table (t,
+    feature, threshold, votes), in any order.  Building the projection runs
+    no Spark job.
 
-    Raises ValueError when the stump table is empty."""
-    # bounded: one row per boosting round
-    rows = stumps_df.select("t", "feature", "threshold", "votes").collect()
-    if not rows:
+    Raises ValueError when ``stumps`` is empty."""
+    if not stumps:
         raise ValueError("score_model: the stump table is empty (a model needs 1+ rounds)")
-    h = _margins(sorted(rows, key=lambda r: r.t), len(rows[0].votes))
+    h = _margins(sorted(stumps, key=lambda s: s.t), len(stumps[0].votes))
     return emb.select("*", h.alias("scores"))
 
 

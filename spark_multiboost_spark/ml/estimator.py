@@ -4,10 +4,12 @@ BASELINE.json north star: "MLlib pipeline with custom estimator").
 The reference exposes AdaBoostMHAlgorithm(...).run(rdd) returning an
 AdaBoostMHModel [R] .../stronglearners/AdaBoostMH.scala (reconstructed,
 mount empty); here the same capability is a standard pyspark.ml pair so it
-composes with Pipelines. The fitted model is a TABLE of stumps (persistable
-parquet — A13), not an opaque object, and ``transform`` is one row-wise
-projection of its input (``boosting.score_model``): no shuffle, no join
-and no read of ``idCol``, so every input row is scored on its own.
+composes with Pipelines. Like the reference's model, the fitted model is
+its list of stumps, the one ``boosting.train`` returns; its stump table
+(``stumps_df``) and training record (``summary``) are views of that list.
+``transform`` is one row-wise projection of its input
+(``boosting.score_model``): no Spark job until an action, no shuffle, no
+join and no read of ``idCol``, so every input row is scored on its own.
 """
 
 from __future__ import annotations
@@ -102,34 +104,38 @@ class AdaBoostMHClassifier(Estimator, _ABParams):
             seed=self.getOrDefault(self.seed),
             label_set_col="labels" if multi else None,
         )
-        model = AdaBoostMHModel(
-            stumps_df=boosting.stumps_to_df(spark, stumps),
-            summary=[
-                Row(t=s.t, feature=s.feature, threshold=s.threshold, z=s.z, norm=s.norm)
-                for s in stumps
-            ],
-        )
+        model = AdaBoostMHModel(stumps)
         model._resetUid(self.uid)
         return self._copyValues(model)
 
 
 class AdaBoostMHModel(Model, _ABParams):
-    """Fitted strong hypothesis.  `transform` keeps every input column, in
-    order, and appends ``scores``, the K margins H(x)[l] in class order, and
-    ``predicted_labels``, the classes with positive margin.  K is the length
-    of the stumps' votes.
+    """Fitted strong hypothesis: ``stumps``, the :class:`boosting.Stump` list
+    of the training rounds in t order.  `transform` keeps every input
+    column, in order, and appends ``scores``, the K margins H(x)[l] in class
+    order, and ``predicted_labels``, the classes with positive margin.  K is
+    the length of the stumps' votes.
 
     ``summary`` is the training record, one ``Row(t, feature, threshold, z,
-    norm)`` per round, kept on the driver (no Spark job): the product of
-    the ``norm`` column bounds the training Hamming loss (Schapire & Singer
-    1999).  A model loaded from a table has none."""
+    norm)`` per round, read from ``stumps`` on the driver (no Spark job):
+    the product of the ``norm`` column bounds the training Hamming loss
+    (Schapire & Singer 1999).  ``stumps_df`` is the same list as a stump
+    table (``boosting.stumps_to_df``), for writing or joining."""
 
-    def __init__(
-        self, stumps_df: DataFrame | None = None, summary: list[Row] | None = None
-    ):
+    def __init__(self, stumps: list[boosting.Stump]):
         super().__init__()
-        self.stumps_df = stumps_df
-        self.summary = summary
+        self.stumps = stumps
+
+    @property
+    def summary(self) -> list[Row]:
+        return [
+            Row(t=s.t, feature=s.feature, threshold=s.threshold, z=s.z, norm=s.norm)
+            for s in self.stumps
+        ]
+
+    @property
+    def stumps_df(self) -> DataFrame:
+        return boosting.stumps_to_df(SparkSession.active(), self.stumps)
 
     def _transform(self, dataset: DataFrame) -> DataFrame:
         # the input row rides in one struct, so its columns pass through as
@@ -140,7 +146,7 @@ class AdaBoostMHModel(Model, _ABParams):
             .cast("array<double>")
             .alias("embedding"),
         )
-        return boosting.score_model(emb, self.stumps_df).select(
+        return boosting.score_model(emb, self.stumps).select(
             "row.*",
             "scores",
             F.filter(
@@ -148,11 +154,3 @@ class AdaBoostMHModel(Model, _ABParams):
                 lambda l: F.col("scores")[l] > 0,
             ).alias("predicted_labels"),
         )
-
-    # A13: model persistence — model-as-table round-trip
-    def save_table(self, path: str) -> None:
-        self.stumps_df.write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load_table(cls, spark: SparkSession, path: str):
-        return cls(stumps_df=spark.read.parquet(path))

@@ -75,8 +75,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _fixed_scores(emb: DataFrame, stumps=_STUMPS_FIXED) -> DataFrame:
     """(id, class, score, pred) of ``emb`` under fixed stumps (A9)."""
-    sdf = boosting.stumps_to_df(emb.sparkSession, stumps)
-    return boosting._explode_margins(boosting.score_model(emb, sdf))
+    return boosting._explode_margins(boosting.score_model(emb, stumps))
 
 
 def _weighted_uniform(emb: DataFrame) -> tuple[DataFrame, int]:
@@ -1564,7 +1563,7 @@ def estimator_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rmtree'd at exit (session.sf_scratch)
     path = os.path.join(sf_scratch("d7", sf_dir), "stumps")
     model.stumps_df.write.mode("overwrite").parquet(path)
-    reloaded = spark.read.parquet(path)
+    reloaded = spark.read.parquet(path).collect()  # bounded: D7_ROUNDS rows, one per stump
     return boosting._explode_margins(boosting.score_model(emb4, reloaded)).select(
         "id", "class", F.round("score", 6).alias("score"), "pred"
     )
@@ -1637,7 +1636,7 @@ def estimator_multilabel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).fit(emb4)
     path = os.path.join(sf_scratch("d7ml", sf_dir), "stumps")
     model.stumps_df.write.mode("overwrite").parquet(path)
-    reloaded = spark.read.parquet(path)
+    reloaded = spark.read.parquet(path).collect()  # bounded: D7_ROUNDS rows, one per stump
     return boosting._explode_margins(boosting.score_model(emb4, reloaded)).select(
         "id", "class", F.round("score", 6).alias("score"), "pred"
     )
@@ -1726,7 +1725,6 @@ def train_hash_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_pred=_a12_sample_pred,
         feature_fraction=A12_FEAT_KEEP / D7_FEATS,
     )
-    sdf = boosting.stumps_to_df(spark, stumps)
-    return boosting._explode_margins(boosting.score_model(emb4, sdf)).select(
+    return boosting._explode_margins(boosting.score_model(emb4, stumps)).select(
         "id", "class", F.round("score", 6).alias("score"), "pred"
     )

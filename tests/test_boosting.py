@@ -352,7 +352,7 @@ def test_train_rejects_zero_rounds(stump_unit, spark):
 def test_score_model_rejects_empty_stump_table(stump_unit, spark):
     emb, _, _ = stump_unit
     with pytest.raises(ValueError, match="stump table is empty"):
-        boosting.score_model(emb, boosting.stumps_to_df(spark, []))
+        boosting.score_model(emb, [])
 
 
 def test_transform_scores_duplicate_ids_row_by_row(stump_unit, spark):
@@ -408,10 +408,7 @@ def test_score_model_plan_is_one_projection(stump_unit, spark, tmp_path):
     K margins to each row."""
     emb, _, _ = stump_unit
     emb.write.parquet(str(tmp_path / "emb"))
-    scored = boosting.score_model(
-        spark.read.parquet(str(tmp_path / "emb")),
-        boosting.stumps_to_df(spark, _TWO_STUMPS),
-    )
+    scored = boosting.score_model(spark.read.parquet(str(tmp_path / "emb")), _TWO_STUMPS)
     _one_projection(scored)
     assert scored.columns == emb.columns + ["scores"]
     assert scored.count() == 6
@@ -424,38 +421,52 @@ def test_transform_plan_is_one_projection(stump_unit, spark, tmp_path):
 
     emb, _, _ = stump_unit
     emb.write.parquet(str(tmp_path / "emb"))
-    model = AdaBoostMHModel(stumps_df=boosting.stumps_to_df(spark, _TWO_STUMPS))
+    model = AdaBoostMHModel(_TWO_STUMPS)
     out = model.transform(spark.read.parquet(str(tmp_path / "emb")))
     _one_projection(out)
     assert out.count() == 6
 
 
+def _jobs_in_group(spark, group: str, action) -> int:
+    """Spark jobs that ``action()`` launches, counted in a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_transform_job_count(stump_unit, spark):
     """Regression guard, counted by Spark itself: transforming and
-    collecting a persisted frame launches 2 Spark jobs, the stump table's
-    collect and the result's (4 while transform pivoted the scores by id
-    and joined them back).  The stump table's collect is one task."""
+    collecting a persisted frame launches 1 Spark job, the result's."""
     from spark_multiboost_spark.ml.estimator import AdaBoostMHModel
 
     emb, _, _ = stump_unit
-    model = AdaBoostMHModel(stumps_df=boosting.stumps_to_df(spark, _TWO_STUMPS))
+    model = AdaBoostMHModel(_TWO_STUMPS)
     df = emb.persist()
     df.count()
-    sc = spark.sparkContext
-    group = "test_transform_job_count"
-    sc.setJobGroup(group, group)
     try:
-        model.transform(df).select("vec_id", "scores", "predicted_labels").collect()
+        jobs = _jobs_in_group(
+            spark,
+            "test_transform_job_count",
+            lambda: model.transform(df).select("vec_id", "scores", "predicted_labels").collect(),
+        )
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
         df.unpersist()
-    tracker = sc.statusTracker()
-    jobs = sorted(tracker.getJobIdsForGroup(group))
-    assert len(jobs) == 2, f"transform launched {len(jobs)} Spark jobs"
-    tasks = sum(
-        tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(jobs[0]).stageIds
-    )
-    assert tasks == 1, f"the stump table's collect ran {tasks} tasks"
+    assert jobs == 1, f"transform launched {jobs} Spark jobs"
+
+
+def test_transform_runs_no_job(stump_unit, spark):
+    """transform is lazy: the model holds its stumps, so building the scored
+    frame runs no Spark job before an action."""
+    from spark_multiboost_spark.ml.estimator import AdaBoostMHModel
+
+    emb, _, _ = stump_unit
+    model = AdaBoostMHModel(_TWO_STUMPS)
+    jobs = _jobs_in_group(spark, "test_transform_runs_no_job", lambda: model.transform(emb))
+    assert jobs == 0, f"transform launched {jobs} Spark jobs before an action"
 
 
 def test_transform_keeps_columns_without_id(spark):
@@ -468,7 +479,7 @@ def test_transform_keeps_columns_without_id(spark):
         [("a", [0.1, 2.0], 7), ("b", [0.9, 0.5], 8)],
         "name STRING, x ARRAY<DOUBLE>, embedding INT",
     )
-    model = AdaBoostMHModel(stumps_df=boosting.stumps_to_df(spark, _TWO_STUMPS))
+    model = AdaBoostMHModel(_TWO_STUMPS)
     out = model.transform(df, {model.featuresCol: "x"})
     assert out.columns == ["name", "x", "embedding", "scores", "predicted_labels"]
     rows = sorted(out.collect(), key=lambda r: r["name"])
@@ -523,7 +534,7 @@ def test_margin_code_size_is_constant_in_t(spark):
     ]
 
     def transform(n):
-        model = AdaBoostMHModel(stumps_df=boosting.stumps_to_df(spark, stumps[:n]))
+        model = AdaBoostMHModel(stumps[:n])
         return model.transform(emb)
 
     def weights(n):
@@ -570,9 +581,7 @@ def test_training_learns_separable_data(spark):
         rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>, label INT"
     )
     stumps = boosting.train(spark, emb, num_rounds=6, num_classes=k)
-    scored = boosting._explode_margins(
-        boosting.score_model(emb, boosting.stumps_to_df(spark, stumps))
-    )
+    scored = boosting._explode_margins(boosting.score_model(emb, stumps))
     mlp = boosting.mlp_long(emb, k)
     loss = boosting.hamming_loss(scored, mlp).collect()[0]["hamming_loss"]
     assert loss < 1.0 / k / 2  # far below the all-negative baseline (1/3)
@@ -595,6 +604,14 @@ def test_summary_bounds_training_loss(spark):
     model = AdaBoostMHClassifier(numRounds=6, numClasses=k).fit(emb)
     summary = model.summary
     assert [r.t for r in summary] == list(range(6))
+    # summary and the stump table are views of the fitted stump list
+    table = model.stumps_df.orderBy("t").collect()
+    assert len(table) == len(summary) == len(model.stumps)
+    for s, r, row in zip(model.stumps, summary, table):
+        assert (r.t, r.feature, r.threshold, r.z, r.norm) == (s.t, s.feature, s.threshold, s.z, s.norm)
+        assert (row.t, row.feature, row.threshold, row.z, list(row.votes)) == (
+            s.t, s.feature, s.threshold, s.z, s.votes
+        )
     assert all(0 < r.norm <= 1 + 1e-12 for r in summary), summary
     scored = (
         model.transform(emb).select("label", "predicted_labels").collect()
@@ -615,9 +632,7 @@ def test_training_on_fixture_embeddings(spark, sf_dir):
     emb = load_tables(spark, sf_dir)["embeddings"]
     mlp = boosting.mlp_long(emb, 10)
     stumps = boosting.train(spark, emb, num_rounds=3, num_classes=10)
-    scored = boosting._explode_margins(
-        boosting.score_model(emb, boosting.stumps_to_df(spark, stumps))
-    )
+    scored = boosting._explode_margins(boosting.score_model(emb, stumps))
     loss = boosting.hamming_loss(scored, mlp).collect()[0]["hamming_loss"]
     assert loss <= 0.1 + 1e-9
 
@@ -755,9 +770,7 @@ def test_multilabel_training_learns_separable_sets(spark):
     stumps = boosting.train(
         spark, emb, num_rounds=6, num_classes=6, label_set_col="labels"
     )
-    scored = boosting._explode_margins(
-        boosting.score_model(emb, boosting.stumps_to_df(spark, stumps))
-    )
+    scored = boosting._explode_margins(boosting.score_model(emb, stumps))
     mlp = boosting.mlp_long_multi(emb, 6)
     loss = boosting.hamming_loss(scored, mlp).collect()[0]["hamming_loss"]
     assert loss < 2.0 / 6 / 2  # far below the all-negative baseline

@@ -197,14 +197,13 @@ def test_scorer_matches_numpy(spark, k, levels, stumps):
         [(i, [float(v) for v in row]) for i, row in enumerate(x)],
         "vec_id bigint, embedding array<double>",
     )
-    sdf = boosting.stumps_to_df(spark, model)
     got = np.zeros_like(want)
-    for r in boosting._explode_margins(boosting.score_model(emb, sdf)).collect():
+    for r in boosting._explode_margins(boosting.score_model(emb, model)).collect():
         got[r["id"], r["class"]] = r["score"]
         assert r["pred"] == (1 if want[r["id"], r["class"]] > 0 else -1)
     assert np.abs(got - want).max() < 1e-12
     rows = sorted(
-        AdaBoostMHModel(stumps_df=sdf).transform(emb).collect(),
+        AdaBoostMHModel(model).transform(emb).collect(),
         key=lambda r: r["vec_id"],
     )
     assert [r["vec_id"] for r in rows] == list(range(len(x)))
