@@ -55,6 +55,7 @@ indexing in both engines).
 
 from __future__ import annotations
 
+import json
 import math
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
@@ -111,28 +112,39 @@ def _phi(value: Column, threshold: float | Column) -> Column:
     return F.when(value > threshold, 1.0).otherwise(-1.0)
 
 
+# the Spark type of a stump list, and of the stump table's rows
+_STUMP_TYPE = "ARRAY<STRUCT<t INT, feature INT, threshold DOUBLE, z DOUBLE, votes ARRAY<DOUBLE>>>"
+
+
+def _stump_literal(stumps: Sequence[Stump | Row]) -> Column:
+    """The stump list as one Spark value of type ``_STUMP_TYPE``, in list
+    order: a JSON string literal under ``from_json``, which the optimizer
+    folds to a constant, so building it costs the same py4j calls at any
+    length.  ``json.dumps`` writes round-tripping float digits and NaN /
+    ±Infinity, which ``from_json`` reads back bit for bit; it rejects numpy
+    scalars, hence ``int()`` / ``float()``."""
+    rows = [
+        {"t": int(s.t), "feature": int(s.feature), "threshold": float(s.threshold),
+         "z": float(s.z), "votes": [float(v) for v in s.votes]}
+        for s in stumps
+    ]
+    return F.from_json(F.lit(json.dumps(rows)), _STUMP_TYPE)
+
+
 def _margins(stumps: Sequence[Stump | Row], num_classes: int) -> Column:
     """H(x) = sum_s v_s phi_s(x), the K margins of the row's ``embedding`` as
-    one array column: an ``aggregate`` over one literal array of the
-    stumps' (feature, threshold, votes) structs in t order, from K zeros,
-    adding v_s[l] phi_s to class l per stump.  Spark evaluates ``aggregate``
-    outside whole-stage codegen, so the generated code does not grow with T
-    (an unrolled K·T sum outgrows Janino's 64 KB method limit near
-    T = 100); a row still does O(K T) work."""
-    table = F.array(*[
-        F.struct(
-            F.lit(s.feature).alias("feature"),
-            F.lit(float(s.threshold)).alias("threshold"),
-            F.array(*[F.lit(float(v)) for v in s.votes]).alias("votes"),
-        )
-        for s in stumps
-    ])
+    one array column: an ``aggregate`` over :func:`_stump_literal` of the
+    stumps in t order, from K zeros, adding v_s[l] phi_s to class l per
+    stump.  Spark evaluates ``aggregate`` outside whole-stage codegen, so
+    neither the generated code nor the driver's work to build the column
+    grows with T (an unrolled K·T sum outgrows Janino's 64 KB method limit
+    near T = 100); a row still does O(K T) work."""
 
     def add(h: Column, s: Column) -> Column:
         phi = _phi(F.element_at("embedding", s["feature"]), s["threshold"])
         return F.zip_with(h, s["votes"], lambda a, v: a + v * phi)
 
-    return F.aggregate(table, F.array(*[F.lit(0.0)] * num_classes), add)
+    return F.aggregate(_stump_literal(stumps), F.array(*[F.lit(0.0)] * num_classes), add)
 
 
 def _log_factor(y: Column, h: Column, log_norm: float) -> Column:
@@ -526,21 +538,13 @@ def fit_stump(
     return _best_cut(rows, m, num_classes, t)
 
 
-def stumps_to_df(spark: SparkSession, stumps: list[Stump]) -> DataFrame:
-    """Model-as-table (SURVEY §1.2): (t, feature, threshold, z, votes).
-
-    Built as a literal-expression plan (``session.local_df``): the stumps
-    are embedded in the PLAN, so every broadcast build, parquet write and
-    collect of the table is a JVM-only job with no Python-worker roundtrip.
-    It is still a job, not a local relation: a one-partition ``range(1)``
-    plus an explode, one task holding the ≤ num_rounds rows."""
-    from ..session import local_df
-
-    return local_df(
-        spark,
-        [(s.t, s.feature, s.threshold, s.z, list(s.votes)) for s in stumps],
-        "t INT, feature INT, threshold DOUBLE, z DOUBLE, votes ARRAY<DOUBLE>",
-    )
+def stumps_to_df(spark: SparkSession, stumps: Sequence[Stump]) -> DataFrame:
+    """Model-as-table (SURVEY §1.2): one row (t, feature, threshold, z,
+    votes) per stump, every field nullable.  The rows are :func:`_stump_literal`
+    inlined over a one-partition ``range(1)``: the stumps are in the PLAN, so
+    each write or collect of the table is a JVM-only job with no
+    Python-worker roundtrip, and its one task holds the ≤ num_rounds rows."""
+    return spark.range(1, numPartitions=1).select(F.inline(_stump_literal(stumps)))
 
 
 def update_weights(
@@ -548,16 +552,16 @@ def update_weights(
 ) -> DataFrame:
     """A8 as one step of the iterated path: w' = w exp(-y v_l phi(x) - ln Z_t),
     Z_t = ``stump.norm`` (found by :func:`fit_stump`), row-wise with no
-    aggregate.  :func:`train` does not call it: its weights are the same
-    factors in closed form.  It stays public for ``q_a8_weight_update`` and
-    the benchmark's traced copy of ``train`` (perfbench/workloads.py), which
-    ROADMAP.md's item 4 deletes.  With a single earlier stump it
-    computes the same floats as :func:`train`'s round-2 weights."""
-    phi = feats.filter(F.col("feature") == stump.feature).select(
-        "id", _phi(F.col("value"), stump.threshold).alias("phi")
+    aggregate, the cut and votes read from :func:`_stump_literal`.
+    :func:`train` computes the same factors in closed form; this stays
+    public for ``q_a8_weight_update`` and the benchmark's traced copy of
+    ``train`` (perfbench/workloads.py), which ROADMAP.md's item 4 deletes.
+    With one earlier stump it gives the same floats as round 2 of :func:`train`."""
+    s = _stump_literal([stump])[0]
+    phi = feats.filter(F.col("feature") == s["feature"]).select(
+        "id", _phi(F.col("value"), s["threshold"]).alias("phi")
     )
-    vote = F.element_at(F.array(*[F.lit(v) for v in stump.votes]), F.col("class") + 1)
-    h = vote * F.col("phi")
+    h = F.element_at(s["votes"], F.col("class") + 1) * F.col("phi")
     factor = _log_factor(F.col("y"), h, math.log(stump.norm))
     return weighted.join(phi, "id").select(
         "id", "class", "y", (F.col("weight") * F.exp(factor)).alias("weight")
@@ -565,7 +569,7 @@ def update_weights(
 
 
 def _hash_sample(fraction: float, seed: int) -> Callable[[int], Column]:
-    """``sample_fraction`` as a ``sample_pred``: round t keeps the ids whose
+    """A ``sample_pred`` for :func:`train`: round t keeps the ids whose
     xxhash64 with ``seed`` + t lands in the lowest ``fraction`` of 2^20
     buckets, independently per round.  The hash takes an id of any type and
     pmod keeps the bucket in [0, 2^20), so no step can overflow int64 (ANSI
@@ -581,9 +585,7 @@ def train(
     emb: DataFrame,
     num_rounds: int = 10,
     num_classes: int = 10,
-    sample_fraction: float | None = None,
     feature_fraction: float | None = None,
-    seed: int = 42,
     label_set_col: str | None = None,
     sample_pred: Callable[[int], Column] | None = None,
 ) -> list[Stump]:
@@ -614,11 +616,11 @@ def train(
     ``sample_pred``, a callable ``t -> boolean Column over 'id'``, picks
     the rows round t's stump search sees (VERDICT r10 item 2: pure
     arithmetic that SQL repeats makes sampled training oracle-checkable),
-    while Z_t covers every row.  ``sample_fraction`` builds it as
-    :func:`_hash_sample` of (id, ``seed`` + t); ``sample_pred`` wins if
-    both are set.
+    while Z_t covers every row; :func:`_hash_sample` builds the sampler of
+    a fraction and a seed.
 
-    Raises ValueError, before any Spark job, when ``num_rounds`` < 1.
+    Raises ValueError, before any Spark job, when ``num_rounds`` < 1, and
+    after the one pre-loop action when ``emb`` has no rows.
     """
     if num_rounds < 1:
         raise ValueError(f"train: num_rounds must be at least 1, got {num_rounds}")
@@ -627,8 +629,9 @@ def train(
     emb = emb.select(F.col("vec_id").alias("id"), "embedding", label).persist()
     # bounded: the one pre-loop action, a 1-row agg of m and the feature count
     m, n_feats = emb.agg(F.count(F.lit(1)), F.max(F.size("embedding"))).collect()[0]
-    if sample_pred is None and sample_fraction is not None:
-        sample_pred = _hash_sample(sample_fraction, seed)
+    if m == 0:
+        emb.unpersist()
+        raise ValueError("train: the input has no rows")
     sampled = sample_pred is not None
     carry = [f"{c}_{l}" for l in range(num_classes) for c in ("y", "weight")]
     carry += ["kept"] if sampled else []
@@ -655,8 +658,8 @@ def score_model(emb: DataFrame, stumps: Sequence[Stump | Row]) -> DataFrame:
     ``scores``, the K margins in class order.
 
     ``stumps`` are :class:`Stump` objects or rows of a stump table (t,
-    feature, threshold, votes), in any order.  Building the projection runs
-    no Spark job.
+    feature, threshold, z, votes), in any order.  Building the projection
+    runs no Spark job and costs the same py4j calls at any T.
 
     Raises ValueError when ``stumps`` is empty."""
     if not stumps:

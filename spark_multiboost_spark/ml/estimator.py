@@ -90,19 +90,17 @@ class AdaBoostMHClassifier(Estimator, _ABParams):
             .alias("embedding"),
             label_expr,
         )
-        frac = (
-            self.getOrDefault(self.sampleFraction)
-            if self.isSet(self.sampleFraction)
-            else None
-        )
+        sample_pred = None
+        if self.isSet(self.sampleFraction):
+            frac, seed = self.getOrDefault(self.sampleFraction), self.getOrDefault(self.seed)
+            sample_pred = boosting._hash_sample(frac, seed)
         stumps = boosting.train(
             spark,
             emb,
             num_rounds=self.getOrDefault(self.numRounds),
             num_classes=self.getOrDefault(self.numClasses),
-            sample_fraction=frac,
-            seed=self.getOrDefault(self.seed),
             label_set_col="labels" if multi else None,
+            sample_pred=sample_pred,
         )
         model = AdaBoostMHModel(stumps)
         model._resetUid(self.uid)

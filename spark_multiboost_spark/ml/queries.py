@@ -586,7 +586,7 @@ def train_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference: DecisionStumpAlgorithm sampleRate param [R], confidence M)."""
     emb = _emb(spark, sf_dir)
     stumps = boosting.train(
-        spark, emb, num_rounds=2, num_classes=K, sample_fraction=0.5, seed=7
+        spark, emb, num_rounds=2, num_classes=K, sample_pred=boosting._hash_sample(0.5, 7)
     )
     return boosting.stumps_to_df(spark, stumps).select("t", "feature", "threshold")
 
@@ -626,9 +626,7 @@ def train_feature_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     featureRate analogue [R], confidence M) — deterministic rotating subset,
     rows-only like the instance-sampling twin."""
     emb = _emb(spark, sf_dir)
-    stumps = boosting.train(
-        spark, emb, num_rounds=2, num_classes=K, feature_fraction=0.25, seed=11
-    )
+    stumps = boosting.train(spark, emb, num_rounds=2, num_classes=K, feature_fraction=0.25)
     return boosting.stumps_to_df(spark, stumps).select("t", "feature", "threshold")
 
 
@@ -1699,7 +1697,7 @@ def train_hash_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE restriction on the search frame, then scores — so the sampled
     model's actual predictions are value-hashed against DuckDB, upgrading
     A12 from rows-only to an exact oracle (q_a12_train_sampled, the
-    xxhash64 ``sample_fraction`` twin, stays a rows-only contract row).
+    xxhash64 ``_hash_sample`` twin, stays a rows-only contract row).
 
     Determinism: same quantized argmin key as D7 (floor(z*1e9+0.5), feature,
     threshold).  Measured top-2 key gaps before registration (the round-11

@@ -205,7 +205,7 @@ def test_train_keeps_no_weight_state(spark, monkeypatch):
     for name in ("localCheckpoint", "persist"):
         monkeypatch.setattr(frame, name, counting(name, getattr(frame, name)))
     stumps = boosting.train(
-        spark, emb, num_rounds=3, num_classes=3, sample_fraction=0.5
+        spark, emb, num_rounds=3, num_classes=3, sample_pred=boosting._hash_sample(0.5, 42)
     )
     assert len(stumps) == 3
     assert calls == {"update_weights": 0, "localCheckpoint": 0, "persist": 1}
@@ -559,6 +559,105 @@ def test_margin_code_size_is_constant_in_t(spark):
     ]
 
 
+def test_margin_build_is_constant_in_t(spark):
+    """The stump list reaches Spark as one folded literal: building (not
+    running) ``score_model`` over 100 stumps takes as many py4j commands as
+    over 2 (K = 10), and the optimized plan has evaluated the ``from_json``
+    away.  Garbage-collection messages are not counted: when they are sent
+    depends on Python's collector, not on the build."""
+    import gc
+
+    k = 10
+    emb = spark.createDataFrame(
+        [(i, [0.1 * i, 1.0 - 0.1 * i], i % k) for i in range(4)],
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>, label INT",
+    )
+    stumps = [
+        boosting.Stump(t, 1 + t % 2, 0.05 * t, 0.0, [0.125 * ((t + l) % 7) for l in range(k)])
+        for t in range(100)
+    ]
+    client = spark.sparkContext._gateway._gateway_client
+
+    def commands(n):
+        gc.collect()
+        sent = []
+        real = client.send_command
+
+        def counting(command, *args, **kwargs):
+            sent.append(command)
+            return real(command, *args, **kwargs)
+
+        client.send_command = counting
+        try:
+            scored = boosting.score_model(emb, stumps[:n])
+        finally:
+            del client.send_command
+        return sum(not c.startswith("m\nd\n") for c in sent), scored
+
+    commands(2)  # first-call lookups are not part of the comparison
+    (small, _), (large, scored) = commands(2), commands(100)
+    assert small == large, f"building H(x) took {small} py4j commands at T = 2, {large} at T = 100"
+    plan = scored._jdf.queryExecution().optimizedPlan().toString()
+    assert "from_json" not in plan and "JsonToStructs" not in plan, plan
+
+
+def test_stumps_to_df_round_trips_exactly(spark):
+    """The stump table holds the stumps' values bit for bit, NaN, ±inf,
+    -0.0, the smallest subnormal, the largest double and numpy scalars
+    included; an empty list is an empty table with the same five columns;
+    a collect is one job of one task."""
+    import struct
+
+    import numpy as np
+
+    nan, inf = float("nan"), float("inf")
+    stumps = [
+        boosting.Stump(0, 1, nan, 0.5, [inf, -0.0, 5e-324]),
+        boosting.Stump(1, 2, -inf, nan, [1.7976931348623157e308, nan, -5e-324]),
+        boosting.Stump(2, 3, -0.0, 5e-324, [-inf, 0.1, 1 / 3]),
+        boosting.Stump(
+            np.int64(3), np.int64(4), np.float64(0.1), np.float64(2 / 3),
+            list(np.array([-2.5, 1e-300, 7.0])),
+        ),
+    ]
+
+    def bits(t, feature, threshold, z, votes):
+        return struct.pack(f"<2i{2 + len(votes)}d", t, feature, threshold, z, *votes)
+
+    group = "test_stumps_to_df_round_trips_exactly"
+    got = []
+    jobs = _jobs_in_group(
+        spark, group, lambda: got.extend(boosting.stumps_to_df(spark, stumps).collect())
+    )
+    assert [bits(*r) for r in got] == [
+        bits(int(s.t), int(s.feature), s.threshold, s.z, s.votes) for s in stumps
+    ]
+    assert jobs == 1, f"collecting the stump table launched {jobs} Spark jobs"
+    tracker = spark.sparkContext.statusTracker()
+    (job,) = tracker.getJobIdsForGroup(group)
+    assert [tracker.getStageInfo(st).numTasks for st in tracker.getJobInfo(job).stageIds] == [1]
+
+    empty = boosting.stumps_to_df(spark, [])
+    assert empty.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in empty.schema] == [
+        ("t", "int"), ("feature", "int"), ("threshold", "double"), ("z", "double"),
+        ("votes", "array<double>"),
+    ]
+
+
+def test_train_rejects_empty_input(stump_unit, spark):
+    """An input with no rows has no weights (1/(mK) with m = 0): train
+    names it after its pre-loop action, and so does the estimator."""
+    from spark_multiboost_spark.ml.estimator import AdaBoostMHClassifier
+
+    emb, _, _ = stump_unit
+    empty = emb.filter(F.lit(False))
+    with pytest.raises(ValueError, match="train: the input has no rows"):
+        boosting.train(spark, empty, num_rounds=2, num_classes=2)
+    with pytest.raises(ValueError, match="train: the input has no rows"):
+        AdaBoostMHClassifier(numRounds=2, numClasses=2).fit(empty)
+
+
 def test_weight_update_normalizes(stump_unit, spark):
     emb, weighted, feats = stump_unit
     stump = boosting.fit_stump(weighted, feats, m=6, num_classes=2)
@@ -675,7 +774,7 @@ def test_a12_sampled_training_deterministic(spark, sf_dir):
     runs = [
         boosting.train(
             spark, emb, num_rounds=2, num_classes=10,
-            sample_fraction=0.5, seed=42,
+            sample_pred=boosting._hash_sample(0.5, 42),
         )
         for _ in range(2)
     ]
@@ -691,7 +790,7 @@ def test_a12_sampled_training_deterministic(spark, sf_dir):
 
 
 def test_a12_fraction_sampler_binds(spark, sf_dir):
-    """``sample_fraction`` non-vacuity: each round's hash predicate keeps a
+    """``_hash_sample`` non-vacuity: each round's hash predicate keeps a
     strict subset of the ids near the fraction, the two rounds keep
     different ids, and the sampler takes any id type — a STRING id column
     trains through the estimator, and BIGINT ids near 2^62 train where
@@ -713,7 +812,7 @@ def test_a12_fraction_sampler_binds(spark, sf_dir):
     assert clf.fit(str_emb).transform(str_emb).count() == m
     big = emb.withColumn("vec_id", F.col("vec_id") + F.lit(2**62))
     stumps = boosting.train(
-        spark, big, num_rounds=2, num_classes=10, sample_fraction=0.5, seed=42
+        spark, big, num_rounds=2, num_classes=10, sample_pred=boosting._hash_sample(0.5, 42)
     )
     assert len(stumps) == 2
 
