@@ -43,14 +43,17 @@ once, computes the K weights per row (m·K exp, before the feature explode)
 and pre-aggregates them by (feature, value) with the K classes folded into
 2K columns BEFORE the window prefix-sum, so the window input is |distinct
 values| rows per feature, not m x K; the per-feature window is a d-way
-shuffle (it was d x K with the long-form (feature, class) window), and the
-kernel's ``n_buckets`` salting (:func:`stump_class_weights_salted`) is the
-way out when one feature is skewed.  The weight expression does O(t) work
-per row, the price of carrying no state, but its code size is constant in
-T: H(x) is one ``aggregate`` over a literal stump array.  Instance
-sampling is a mask inside the search's aggregate, never a sampled-id join.
-Feature indices are 1-based everywhere (matches SQL element_at/list
-indexing in both engines).
+shuffle (it was d x K with the long-form (feature, class) window).
+Training's search is that unsalted per-feature window: a feature with ~m
+distinct values puts all of them in one window partition, and no
+parameter of :func:`train` changes that.  The kernel's ``n_buckets``
+salting is reachable only through :func:`stump_class_weights_salted`
+(``q_a4_prefix_weights_salted`` and the property tests).  The weight
+expression does O(t) work per row, the price of carrying no state, but
+its code size is constant in T: H(x) is one ``aggregate`` over a literal
+stump array.  Instance sampling is a mask inside the search's aggregate,
+never a sampled-id join.  Feature indices are 1-based everywhere (matches
+SQL element_at/list indexing in both engines).
 """
 
 from __future__ import annotations
@@ -62,6 +65,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
 
 @dataclass
@@ -78,33 +82,33 @@ class Stump:
     norm: float = math.nan
 
 
-def _label_sign(cls: Column, label_set: bool = False) -> Column:
-    """y in {+1, -1}: +1 iff class ``cls`` is the row's ``label`` (or is in
-    its ``labels`` set)."""
-    hit = F.array_contains("labels", cls) if label_set else cls == F.col("label")
-    return F.when(hit, 1).otherwise(-1)
+def _label_set(df: DataFrame) -> Column:
+    """The row's label set as ARRAY<INT>, the one place the label form is
+    read: ``df``'s ``label`` column itself when its type is an array (a
+    BoosTexter label set), ``array(label)`` when it is a single label, the
+    |Y| = 1 case.  Reads ``df.schema`` only, so it runs no Spark job."""
+    label = F.col("label")
+    if isinstance(df.schema["label"].dataType, ArrayType):
+        return label.cast("array<int>")
+    return F.array(label.cast("int"))
+
+
+def _label_sign(cls: Column) -> Column:
+    """y in {+1, -1}: +1 iff class ``cls`` is in the row's ``labels``, the
+    set :func:`_label_set` builds."""
+    return F.when(F.array_contains("labels", cls), 1).otherwise(-1)
 
 
 def mlp_long(emb: DataFrame, num_classes: int = 10) -> DataFrame:
-    """Lift single-label rows to the multi-label long form
-    (id, class, y in {+1,-1}) — FIXTURES.md §2.1."""
+    """Lift labelled rows to the multi-label long form (id, class, y in
+    {+1,-1}) — FIXTURES.md §2.1: y[i, l] = +1 iff l is in row i's label
+    set.  ``label`` is a single INT label or an ARRAY<INT> label set
+    (:func:`_label_set`)."""
     return emb.select(
         F.col("vec_id").alias("id"),
         F.explode(F.sequence(F.lit(0), F.lit(num_classes - 1))).alias("class"),
-        "label",
+        _label_set(emb).alias("labels"),
     ).select("id", "class", _label_sign(F.col("class")).alias("y"))
-
-
-def mlp_long_multi(emb: DataFrame, num_classes: int = 10) -> DataFrame:
-    """True multi-label long form (BoosTexter label SETS — the reference's
-    core use case, VERDICT r8 item 3): ``labels`` is an ARRAY<INT> column;
-    y[i, l] = +1 iff l ∈ labels_i.  The single-label :func:`mlp_long` is
-    the |labels| = 1 special case."""
-    return emb.select(
-        F.col("vec_id").alias("id"),
-        F.explode(F.sequence(F.lit(0), F.lit(num_classes - 1))).alias("class"),
-        "labels",
-    ).select("id", "class", _label_sign(F.col("class"), label_set=True).alias("y"))
 
 
 def _phi(value: Column, threshold: float | Column) -> Column:
@@ -178,22 +182,18 @@ def init_weights(mlp: DataFrame, m: int, num_classes: int) -> DataFrame:
 
 
 def _weight_rows(
-    emb: DataFrame,
-    stumps: Sequence[Stump],
-    m: int,
-    num_classes: int,
-    label_set: bool,
+    emb: DataFrame, stumps: Sequence[Stump], m: int, num_classes: int
 ) -> DataFrame:
     """Round t's weights as columns of the example rows: ``emb`` (``embedding``
-    and ``label`` or ``labels``) plus ``y_l`` and ``weight_l`` = D_t(i, l)
-    for every class l, a pure function of the row and the ``stumps`` found so
-    far (:func:`_class_weight`).  H_{t-1} is one column, ``h``
-    (:func:`_margins`), computed once per row and read by every class;
-    sum_{s<t} ln Z_s is summed in t order on the driver."""
+    and the label set ``labels``, :func:`_label_set`) plus ``y_l`` and
+    ``weight_l`` = D_t(i, l) for every class l, a pure function of the row
+    and the ``stumps`` found so far (:func:`_class_weight`).  H_{t-1} is one
+    column, ``h`` (:func:`_margins`), computed once per row and read by
+    every class; sum_{s<t} ln Z_s is summed in t order on the driver."""
     classes = range(num_classes)
     signed = emb.select(
         "*",
-        *[_label_sign(F.lit(l), label_set).alias(f"y_{l}") for l in classes],
+        *[_label_sign(F.lit(l)).alias(f"y_{l}") for l in classes],
         *([_margins(stumps, num_classes).alias("h")] if stumps else []),
     )
     h = [F.col("h")[l] for l in classes] if stumps else [None] * num_classes
@@ -348,11 +348,11 @@ def _uniform_side_masses(
     from the source rows, with no feats-x-weights join."""
     base = (
         emb.select(
-            "label",
+            _label_set(emb).alias("labels"),
             F.posexplode(F.slice("embedding", 1, num_features)).alias("f0", "value"),
         )
         .select(
-            "label",
+            "labels",
             (F.col("f0") + 1).alias("feature"),
             "value",
             F.explode(F.sequence(F.lit(0), F.lit(num_classes - 1))).alias("class"),
@@ -519,9 +519,10 @@ def fit_stump(
     order, and repeated values' weights may add up in another order, so
     only the last bits can differ.  ``norm`` covers the rows searched, so
     a caller that filters ``weighted`` gets the normalizer of the sample.
-    A feature with ~m distinct values puts all of them in one window
-    partition; at that skew :func:`stump_class_weights_salted` is the way
-    out.
+    The search is the unsalted per-feature window, as in :func:`train`: a
+    feature with ~m distinct values puts all of them in one window
+    partition.  Nothing here salts; the salted kernel is reachable only
+    through :func:`stump_class_weights_salted`.
 
     Raises ValueError when the search frame has no candidate cut (a
     filter that keeps no rows or no features)."""
@@ -586,7 +587,6 @@ def train(
     num_rounds: int = 10,
     num_classes: int = 10,
     feature_fraction: float | None = None,
-    label_set_col: str | None = None,
     sample_pred: Callable[[int], Column] | None = None,
 ) -> list[Stump]:
     """A10 (reference: AdaBoostMHAlgorithm.run [R]): the boosting loop.
@@ -608,9 +608,10 @@ def train(
     :func:`fit_stump` → :func:`update_weights` chain, round 2's weights are
     the same floats; later rounds sum log-factors where the chain
     multiplies factors, so weights differ in the last bits.  A12: optional
-    instance/feature subsampling of each stump search.  ``label_set_col``
-    names an ARRAY<INT> multi-label column (BoosTexter label sets); None =
-    single-label ``label``.
+    instance/feature subsampling of each stump search.  ``emb``'s ``label``
+    is a single INT label or an ARRAY<INT> label set (BoosTexter label
+    sets); the persisted examples hold it as a set, built once per row
+    (:func:`_label_set`).
 
     Instance sampling is one mask inside the search's aggregate:
     ``sample_pred``, a callable ``t -> boolean Column over 'id'``, picks
@@ -624,9 +625,9 @@ def train(
     """
     if num_rounds < 1:
         raise ValueError(f"train: num_rounds must be at least 1, got {num_rounds}")
-    label_set = label_set_col is not None
-    label = F.col(label_set_col).alias("labels") if label_set else F.col("label")
-    emb = emb.select(F.col("vec_id").alias("id"), "embedding", label).persist()
+    emb = emb.select(
+        F.col("vec_id").alias("id"), "embedding", _label_set(emb).alias("labels")
+    ).persist()
     # bounded: the one pre-loop action, a 1-row agg of m and the feature count
     m, n_feats = emb.agg(F.count(F.lit(1)), F.max(F.size("embedding"))).collect()[0]
     if m == 0:
@@ -637,7 +638,7 @@ def train(
     carry += ["kept"] if sampled else []
     stumps: list[Stump] = []
     for t in range(num_rounds):
-        rows = _weight_rows(emb, stumps, m, num_classes, label_set)
+        rows = _weight_rows(emb, stumps, m, num_classes)
         if sampled:
             rows = rows.withColumn("kept", sample_pred(t))
         rows = _explode(rows, *carry)

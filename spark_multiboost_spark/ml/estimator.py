@@ -4,7 +4,10 @@ BASELINE.json north star: "MLlib pipeline with custom estimator").
 The reference exposes AdaBoostMHAlgorithm(...).run(rdd) returning an
 AdaBoostMHModel [R] .../stronglearners/AdaBoostMH.scala (reconstructed,
 mount empty); here the same capability is a standard pyspark.ml pair so it
-composes with Pipelines. Like the reference's model, the fitted model is
+composes with Pipelines. Like the reference's ``MultiLabeledPoint``, a
+row's label is a label set: ``labelCol`` names an INT label, the set of
+one, or an ARRAY<INT> label set, told apart by the column's type in
+``boosting.train``. Like the reference's model, the fitted model is
 its list of stumps, the one ``boosting.train`` returns; its stump table
 (``stumps_df``) and training record (``summary``) are views of that list.
 ``transform`` is one row-wise projection of its input
@@ -35,13 +38,11 @@ class _ABParams(Params):
         TypeConverters.toString,
     )
     labelCol = Param(
-        Params._dummy(), "labelCol", "integer label column", TypeConverters.toString
-    )
-    labelSetCol = Param(
         Params._dummy(),
-        "labelSetCol",
-        "ARRAY<INT> multi-label column (BoosTexter label sets); when set, "
-        "labelCol is ignored and y[i,l] = +1 iff l is in the row's set",
+        "labelCol",
+        "label column: an INT label, or an ARRAY<INT> label set (BoosTexter "
+        "label sets), told apart by its type; y[i,l] = +1 iff l is in the "
+        "row's set",
         TypeConverters.toString,
     )
     idCol = Param(Params._dummy(), "idCol", "row id column", TypeConverters.toString)
@@ -75,20 +76,12 @@ class AdaBoostMHClassifier(Estimator, _ABParams):
 
     def _fit(self, dataset: DataFrame) -> "AdaBoostMHModel":
         spark = dataset.sparkSession
-        multi = self.isSet(self.labelSetCol)
-        label_expr = (
-            F.col(self.getOrDefault(self.labelSetCol))
-            .cast("array<int>")
-            .alias("labels")
-            if multi
-            else F.col(self.getOrDefault(self.labelCol)).cast("int").alias("label")
-        )
         emb = dataset.select(
             F.col(self.getOrDefault(self.idCol)).alias("vec_id"),
             F.col(self.getOrDefault(self.featuresCol))
             .cast("array<double>")
             .alias("embedding"),
-            label_expr,
+            F.col(self.getOrDefault(self.labelCol)).alias("label"),
         )
         sample_pred = None
         if self.isSet(self.sampleFraction):
@@ -99,7 +92,6 @@ class AdaBoostMHClassifier(Estimator, _ABParams):
             emb,
             num_rounds=self.getOrDefault(self.numRounds),
             num_classes=self.getOrDefault(self.numClasses),
-            label_set_col="labels" if multi else None,
             sample_pred=sample_pred,
         )
         model = AdaBoostMHModel(stumps)

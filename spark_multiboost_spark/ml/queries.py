@@ -1069,11 +1069,11 @@ def calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _label_sets(emb: DataFrame) -> DataFrame:
-    """The fixture's deterministic label SETS as an ARRAY<INT> ``labels``
+    """The fixture's deterministic label SETS as an ARRAY<INT> ``label``
     column: every row's own label, and on even vec_ids also (label+3) mod K."""
     second = F.when(F.col("vec_id") % 2 == 0, (F.col("label") + 3) % K)
     return emb.select(
-        "vec_id", "embedding", F.array_compact(F.array("label", second)).alias("labels")
+        "vec_id", "embedding", F.array_compact(F.array("label", second)).alias("label")
     )
 
 
@@ -1115,10 +1115,10 @@ def multilabel_weight_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     assumes singleton label sets.  labelset_size surfaces per example so
     the oracle hash proves the two-label rows exist.
 
-    Plan: the lift is boosting.mlp_long_multi's map-side explode of the
+    Plan: the lift is boosting.mlp_long's map-side explode of the
     class range; one window partitioned by id for the set-size audit."""
     emb = _label_sets(_emb(spark, sf_dir))
-    mlp = boosting.mlp_long_multi(emb, K)
+    mlp = boosting.mlp_long(emb, K)
     w = Window.partitionBy("id")
     return (
         boosting.init_weights(mlp, emb.count(), K)
@@ -1191,7 +1191,7 @@ def multilabel_stump_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same plan shape as A5: one (feature,class)-partitioned prefix window
     over the pre-aggregated candidate weights."""
     emb = _label_sets(_emb(spark, sf_dir))
-    weighted = boosting.init_weights(boosting.mlp_long_multi(emb, K), emb.count(), K)
+    weighted = boosting.init_weights(boosting.mlp_long(emb, K), emb.count(), K)
     feats = boosting.explode_features(emb).filter(F.col("feature") <= 4)
     cw = boosting.stump_class_weights(weighted, feats)
     return boosting.stump_z(cw).select(
@@ -1601,11 +1601,11 @@ def estimator_multilabel(spark: SparkSession, sf_dir: str) -> DataFrame:
     per row are positive and AdaBoost.MH's per-(instance, class) weight
     matrix is exercised with genuine multi-label structure — not the
     single-label lift every A-group query uses.  Fit AdaBoostMHClassifier
-    (labelSetCol) for {D7_ROUNDS} rounds on embedding[1..{D7_FEATS}],
-    persist + reload the stump table (A13 in the path), score via the A9
-    shape.  The oracle replays the training as unrolled materialized-CTE
-    rounds on the multi-label weighted frame — the trained model's
-    predictions are value-hashed against DuckDB.
+    (labelCol an ARRAY<INT> column) for {D7_ROUNDS} rounds on
+    embedding[1..{D7_FEATS}], persist + reload the stump table (A13 in the
+    path), score via the A9 shape.  The oracle replays the training as
+    unrolled materialized-CTE rounds on the multi-label weighted frame —
+    the trained model's predictions are value-hashed against DuckDB.
 
     Determinism note: on this label-independent fixture the round-1 argmin
     is the DEGENERATE max-threshold cut (a constant hypothesis — with 2/{K}
@@ -1630,7 +1630,7 @@ def estimator_multilabel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("labels"),
     )
     model = AdaBoostMHClassifier(
-        numRounds=D7_ROUNDS, numClasses=K, labelSetCol="labels"
+        numRounds=D7_ROUNDS, numClasses=K, labelCol="labels"
     ).fit(emb4)
     path = os.path.join(sf_scratch("d7ml", sf_dir), "stumps")
     model.stumps_df.write.mode("overwrite").parquet(path)

@@ -4,6 +4,7 @@ loss-decrease check, plus the sf0.001 end-to-end quality anchor."""
 
 from __future__ import annotations
 
+import dataclasses
 import math
 
 import pytest
@@ -104,10 +105,10 @@ def test_fit_stump_exact_z_tie_picks_smallest_feature(spark):
         for j, ls in enumerate(label_sets)
     ]
     emb = spark.createDataFrame(
-        rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>, labels ARRAY<INT>"
+        rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>, label ARRAY<INT>"
     )
     k, m = 3, len(rows)
-    weighted = boosting.init_weights(boosting.mlp_long_multi(emb, k), m, k)
+    weighted = boosting.init_weights(boosting.mlp_long(emb, k), m, k)
     feats = boosting.explode_features(emb)
     zs = boosting.stump_z(boosting.stump_class_weights(weighted, feats)).collect()
     z_min = min(r["z"] for r in zs)
@@ -133,26 +134,30 @@ def test_fit_stump_job_count(stump_unit, spark):
 
 
 @pytest.mark.parametrize(
-    "sampling", [{}, {"sampleFraction": 0.5}], ids=["plain", "sampled"]
+    "params",
+    [{}, {"sampleFraction": 0.5}, {"labelCol": "labels"}],
+    ids=["plain", "sampled", "label_set"],
 )
-def test_fit_job_count(spark, sampling):
+def test_fit_job_count(spark, params):
     """Regression guard, counted by Spark itself: one AdaBoostMHClassifier
     fit at T=2 launches 11 Spark jobs (19 while train carried a weight
     frame), ``sampleFraction``, a mask inside each stump search's
-    aggregate, adds none, and neither does the model's summary."""
+    aggregate, adds none, an ARRAY<INT> label set in ``labelCol`` adds
+    none, and neither does the model's summary."""
     from spark_multiboost_spark.ml.estimator import AdaBoostMHClassifier
 
     rows = [
-        (i, [(i % 9) / 9.0, float(i % 2), ((i * 7) % 5) / 5.0], i % 3) for i in range(30)
+        (i, [(i % 9) / 9.0, float(i % 2), ((i * 7) % 5) / 5.0], i % 3, [i % 3, (i + 1) % 3])
+        for i in range(30)
     ]
     emb = spark.createDataFrame(
-        rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>, label INT"
+        rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>, label INT, labels ARRAY<INT>"
     )
     sc = spark.sparkContext
-    group = f"test_fit_job_count_{len(sampling)}"
+    group = f"test_fit_job_count_{sorted(params)}"
     sc.setJobGroup(group, group)
     try:
-        AdaBoostMHClassifier(numRounds=2, numClasses=3, **sampling).fit(emb)
+        AdaBoostMHClassifier(numRounds=2, numClasses=3, **params).fit(emb)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
@@ -211,12 +216,12 @@ def test_train_keeps_no_weight_state(spark, monkeypatch):
     assert calls == {"update_weights": 0, "localCheckpoint": 0, "persist": 1}
 
 
-def _iterated(emb, rounds, k, multi=False):
+def _iterated(emb, rounds, k):
     """The public iterated path: init_weights -> fit_stump -> update_weights
     per round, carrying the long weight frame."""
     spark = emb.sparkSession
     m = emb.count()
-    mlp = (boosting.mlp_long_multi if multi else boosting.mlp_long)(emb, k)
+    mlp = boosting.mlp_long(emb, k)
     weighted = boosting.init_weights(mlp, m, k).localCheckpoint(eager=True)
     feats = boosting.explode_features(emb).localCheckpoint(eager=True)
     stumps = []
@@ -239,6 +244,38 @@ def _distinct_frame(spark, m=40, d=3, k=4, seed=5):
     )
 
 
+def _bits(records):
+    """Stumps or summary rows as their field values, each float as its hex
+    digits, so == compares bit for bit."""
+
+    def bits(v):
+        if isinstance(v, list):
+            return [bits(u) for u in v]
+        return v.hex() if isinstance(v, float) else v
+
+    return [
+        bits(list(dataclasses.astuple(r) if isinstance(r, boosting.Stump) else r))
+        for r in records
+    ]
+
+
+def test_label_and_its_set_of_one_train_the_same_model(spark):
+    """A single label is the label set of one, told apart by the column's
+    type: ``train`` and the estimator fit the same stumps and summary, bit
+    for bit, from an INT label and from its ARRAY<INT> singleton."""
+    from spark_multiboost_spark.ml.estimator import AdaBoostMHClassifier
+
+    emb = _distinct_frame(spark).withColumn("labels", F.array("label"))
+    sets = emb.select("vec_id", "embedding", F.col("labels").alias("label"))
+    want = boosting.train(spark, emb, num_rounds=3, num_classes=4)
+    assert _bits(boosting.train(spark, sets, num_rounds=3, num_classes=4)) == _bits(want)
+
+    plain = AdaBoostMHClassifier(numRounds=3, numClasses=4).fit(emb)
+    got = AdaBoostMHClassifier(numRounds=3, numClasses=4, labelCol="labels").fit(emb)
+    assert _bits(got.stumps) == _bits(plain.stumps) == _bits(want)
+    assert _bits(got.summary) == _bits(plain.summary)
+
+
 def test_closed_form_t2_bit_equal_to_iterated(spark):
     """On distinct values every group sum has one addend, and the round-2
     weights are w·exp(-y v phi - ln Z) on both paths: train's stumps equal
@@ -259,15 +296,12 @@ def test_closed_form_t5_matches_iterated(spark, multi):
          [i % 3, (i // 3) % 3] if multi else (i * 2) % 3)
         for i in range(m)
     ]
-    label = "labels ARRAY<INT>" if multi else "label INT"
+    label = "label ARRAY<INT>" if multi else "label INT"
     emb = spark.createDataFrame(
         rows, f"vec_id BIGINT, embedding ARRAY<DOUBLE>, {label}"
     )
-    want = _iterated(emb, 5, k, multi)
-    got = boosting.train(
-        spark, emb, num_rounds=5, num_classes=k,
-        label_set_col="labels" if multi else None,
-    )
+    want = _iterated(emb, 5, k)
+    got = boosting.train(spark, emb, num_rounds=5, num_classes=k)
     cuts = [(s.feature, s.threshold) for s in got]
     assert cuts == [(s.feature, s.threshold) for s in want]
     for a, b in zip(got, want):
@@ -314,7 +348,7 @@ def test_closed_form_weights_finite_past_exp_overflow(spark):
         w = w / w.sum()
     assert np.abs(h).max() > 709, "fixture must overflow a plain exp(-yH)"
     got = boosting._weight_rows(
-        emb, stumps, len(rows), k, label_set=False
+        emb.select("*", boosting._label_set(emb).alias("labels")), stumps, len(rows), k
     ).select(*[f"weight_{l}" for l in range(k)]).collect()
     ws = np.array([list(r) for r in got])
     assert np.isfinite(ws).all()
@@ -538,8 +572,10 @@ def test_margin_code_size_is_constant_in_t(spark):
         return model.transform(emb)
 
     def weights(n):
-        rows = emb.select(F.col("vec_id").alias("id"), "embedding", "label")
-        return boosting._weight_rows(rows, stumps[:n], m, k, label_set=False)
+        rows = emb.select(
+            F.col("vec_id").alias("id"), "embedding", boosting._label_set(emb).alias("labels")
+        )
+        return boosting._weight_rows(rows, stumps[:n], m, k)
 
     for build in (transform, weights):
         small, large = _codegen(build(2)), _codegen(build(100))
@@ -864,31 +900,48 @@ def test_multilabel_training_learns_separable_sets(spark):
         third = int(f1 * 3)
         rows.append((i, [f1, float((i * 7) % 5) / 5.0], [third, third + 3]))
     emb = spark.createDataFrame(
-        rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>, labels ARRAY<INT>"
+        rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>, label ARRAY<INT>"
     )
-    stumps = boosting.train(
-        spark, emb, num_rounds=6, num_classes=6, label_set_col="labels"
-    )
+    stumps = boosting.train(spark, emb, num_rounds=6, num_classes=6)
     scored = boosting._explode_margins(boosting.score_model(emb, stumps))
-    mlp = boosting.mlp_long_multi(emb, 6)
+    mlp = boosting.mlp_long(emb, 6)
     loss = boosting.hamming_loss(scored, mlp).collect()[0]["hamming_loss"]
     assert loss < 2.0 / 6 / 2  # far below the all-negative baseline
 
 
-def test_multilabel_estimator_predicts_sets(spark, sf_dir):
-    """The labelSetCol path must flow through the Estimator API and emit
-    multi-class predicted label sets."""
-    from spark_multiboost_spark.ml.estimator import AdaBoostMHClassifier
-    from spark_multiboost_spark.session import load_tables
+def test_multilabel_estimator_predicts_sets(spark):
+    """An ARRAY<INT> ``labelCol`` flows through the Estimator API: on two-label
+    sets over distinct values, the fitted stumps equal the numpy reference's
+    (cut exact, votes within 1e-9), and ``predicted_labels`` are the classes
+    the reference's margins score positive."""
+    import numpy as np
 
-    emb = load_tables(spark, sf_dir)["embeddings"].withColumn(
-        "labels", F.array(F.col("label"), (F.col("label") + 1) % 10)
+    from perfbench import reference
+    from spark_multiboost_spark.ml.estimator import AdaBoostMHClassifier
+
+    m, d, k, rounds = 60, 3, 4, 3
+    rng = np.random.default_rng(11)
+    x = rng.standard_normal((m, d))
+    first = (x[:, 0] > 0).astype(int) + 2 * (x[:, 1] > 0)
+    second = (first + 1 + (rng.random(m) < 0.5)) % k
+    y = -np.ones((m, k), dtype=int)
+    y[np.arange(m), first] = y[np.arange(m), second] = 1
+    emb = spark.createDataFrame(
+        [(i, [float(v) for v in x[i]], [int(first[i]), int(second[i])]) for i in range(m)],
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>, labels ARRAY<INT>",
     )
-    clf = AdaBoostMHClassifier(numRounds=2, numClasses=10, labelSetCol="labels")
-    model = clf.fit(emb)
-    out = model.transform(emb)
-    assert "predicted_labels" in out.columns
-    assert out.count() == emb.count()
+    model = AdaBoostMHClassifier(numRounds=rounds, numClasses=k, labelCol="labels").fit(emb)
+    want = reference.adaboost_mh(x, y, rounds)
+    assert reference.stump_mismatches(model.stumps, want) == []
+    scores = reference.score(
+        x,
+        np.array([s["feature"] for s in want]),
+        np.array([s["threshold"] for s in want]),
+        np.array([s["votes"] for s in want]),
+    )
+    assert np.abs(scores).min() > 1e-6, "fixture must keep every margin off 0"
+    rows = model.transform(emb).select("vec_id", "scores", "predicted_labels").collect()
+    assert reference.score_mismatches(rows, np.arange(m), scores) == []
 
 
 def test_a1_text_parser_roundtrip_exact(spark, sf_dir):
